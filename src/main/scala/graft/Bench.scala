@@ -44,6 +44,7 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    SparkEntry.requireKnownQueries(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
@@ -170,8 +171,10 @@ object Bench {
         // dominates every round-over-round comparison (r21 verdict item 7:
         // single cold pairs kept burning judge/builder time on weather
         // attribution). Additions-only — more passes can only firm up the
-        // min; the timed region and the JSON contract are unchanged.
-        else if (ok2.nonEmpty && ok2.min > 1.5) two :+ onePass()
+        // min; the timed region and the JSON contract are unchanged. The
+        // same GC as the recovery branch runs first, so both third-pass
+        // paths start from the same heap state.
+        else if (ok2.nonEmpty && ok2.min > 1.5) { System.gc(); two :+ onePass() }
         else two
       }
       // min over SUCCESSFUL passes only — a transient failure's

@@ -9,6 +9,7 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 5
+    SparkEntry.requireKnownQueries(Seq(name))
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.engine.Session.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))

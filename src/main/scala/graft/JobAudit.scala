@@ -17,6 +17,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   */
 object JobAudit {
   def main(args: Array[String]): Unit = {
+    SparkEntry.requireKnownQueries(args.toSeq)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.engine.Session.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))

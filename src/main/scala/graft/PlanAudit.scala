@@ -29,6 +29,7 @@ object PlanAudit {
     }.map(_.trim.take(100)).toSeq
 
   def main(args: Array[String]): Unit = {
+    SparkEntry.requireKnownQueries(args.toSeq)
     val spark = graft.engine.Session.local("8")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted

@@ -16,6 +16,7 @@ object PlanDump {
     val tag = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
     val names = args.drop(2)
+    SparkEntry.requireKnownQueries(names.toSeq)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.engine.Session.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))

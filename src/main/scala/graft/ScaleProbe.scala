@@ -33,6 +33,7 @@ object ScaleProbe {
     val qArgs = args.filterNot(a => a == "--deep" || a == "--deep4").toSeq
     require((!deep && !deep4) || qArgs.nonEmpty,
       "--deep/--deep4 need explicit query names")
+    SparkEntry.requireKnownQueries(qArgs)
     val spark = graft.engine.Session.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")

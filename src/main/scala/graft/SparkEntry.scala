@@ -25,6 +25,18 @@ object SparkEntry {
       graft.queries.Embeddings.queries ++
       graft.queries.Lexical.queries
 
+  /** Fails before any session starts when a name is not a declared query,
+    * listing every unknown name at once (a typo would otherwise surface as
+    * a bare NoSuchElementException after the session is up).
+    */
+  def requireKnownQueries(names: Seq[String]): Unit = {
+    val known = queries
+    val unknown = names.filterNot(known.contains).distinct
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.mkString(", ")}" +
+        s" (${known.size} declared in SparkEntry.queries)")
+  }
+
   /** DuckDB-equivalent SQL per query (driver hash-compares at sf0.01). */
   def oracleSql: Map[String, String] =
     graft.queries.Relational.oracle ++

@@ -44,12 +44,31 @@ object Sources {
   def stationCatalog(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").schema(stationCatalogSchema).csv(path)
 
+  /** Reader for a directory of per-scene files (one file per scene), kept
+    * to the leaf names matching `leafGlob`. The directory is the only root
+    * path, so the driver lists it in one call. A glob path (the directory
+    * joined with `*_stations.txt`) expands to one root path per file
+    * instead, and past `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * (32) root paths Spark lists them in a "Listing leaf files" job with
+    * one task per file: two such jobs, one task per scene each, on every
+    * execution of the aligned pipeline. Same idiom as `Tables.streamT`.
+    *
+    * Both forms read the files directly under the directory and skip a
+    * nested plain subdirectory. They differ on a `key=value` subdirectory:
+    * the directory form takes it as a partition, adds the column `key` and
+    * reads only the files under it (SourcesListingSpec pins this). The
+    * per-scene directories hold no such subdirectory.
+    */
+  private def perSceneFiles(spark: SparkSession, leafGlob: String) =
+    spark.read.option("pathGlobFilter", leafGlob)
+
   /** S4: custom text scan — per-scene station list files shaped
-    * `"[33, 35, 36]"`. Glob scan (S2) + `input_file_name` recovers the scene
-    * id from the path; bracket-strip + split + cast parses the payload.
+    * `"[33, 35, 36]"`. Directory scan with a leaf-name filter (S2, see
+    * [[perSceneFiles]]) + `input_file_name` recovers the scene id from the
+    * path; bracket-strip + split + cast parses the payload.
     */
   def stationLists(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.text(dir + "/*_stations.txt")
+    val raw = perSceneFiles(spark, "*_stations.txt").text(dir)
       .withColumn("file", input_file_name())
     raw
       .withColumn("scene_id",
@@ -91,8 +110,9 @@ object Sources {
     * strings (sci-notation) and are cast downstream (F3).
     */
   def metadata(spark: SparkSession, dir: String): DataFrame =
-    spark.read.option("multiLine", "true").schema(mtlSchema)
-      .json(dir + "/*_MTL_metadata.json")
+    perSceneFiles(spark, "*_MTL_metadata.json")
+      .option("multiLine", "true").schema(mtlSchema)
+      .json(dir)
       .withColumn("scene_id",
         regexp_extract(input_file_name(), "([^/]+)_MTL_metadata\\.json$", 1))
 

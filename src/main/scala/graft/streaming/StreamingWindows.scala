@@ -88,28 +88,15 @@ object StreamingWindows {
     // metric isn't worth 2x the state-op cost on the join/dedup paths.
     sc.set("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
       "false")
-    // The smoke path's offset/commit/state checkpoints are throwaway; put
-    // them on tmpfs when available so the drive-to-completion isn't timing
-    // fsyncs of dead files. (A production stream would point this at
-    // durable storage — the location is deployment config, not semantics.)
-    val ckRoot = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else
-      System.getProperty("java.io.tmpdir")
-    // Unique per run: a reused checkpoint would pin the FIRST run's source
-    // path and offsets, which is exactly wrong for a throwaway smoke drive.
-    val ckDir = new java.io.File(
-      s"$ckRoot/graft-ck-$name-${java.util.UUID.randomUUID().toString.take(8)}")
-    val q: StreamingQuery = df.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckDir.getAbsolutePath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+    withThrowawayCheckpoint(name) { ck =>
+      df.writeStream
+        .outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ck)
+        .trigger(Trigger.AvailableNow())
+        .start()
     }
-    rm(ckDir)
     df.sparkSession.table(name)
   }
 
@@ -121,20 +108,42 @@ object StreamingWindows {
     * durable storage (deployment config, not semantics).
     */
   def runForeachBatch(df: DataFrame, name: String)
-      (f: (DataFrame, Long) => Unit): Unit = {
-    val ckRoot = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else
-      System.getProperty("java.io.tmpdir")
-    val ckDir = new java.io.File(
-      s"$ckRoot/graft-ck-$name-${java.util.UUID.randomUUID().toString.take(8)}")
-    val q: StreamingQuery = df.writeStream
-      .foreachBatch(f)
-      .option("checkpointLocation", ckDir.getAbsolutePath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    def rm(g: java.io.File): Unit = {
-      Option(g.listFiles()).foreach(_.foreach(rm)); g.delete(); ()
+      (f: (DataFrame, Long) => Unit): Unit =
+    withThrowawayCheckpoint(name) { ck =>
+      df.writeStream
+        .foreachBatch(f)
+        .option("checkpointLocation", ck)
+        .trigger(Trigger.AvailableNow())
+        .start()
     }
-    rm(ckDir)
+
+  /** Root directory for throwaway checkpoints, given the JVM's temp dir.
+    * The offset/commit/state checkpoints of a drive-to-completion are dead
+    * files, so when the temp dir is the platform default `/tmp` they go on
+    * tmpfs (`shm`, when it exists) and the drive doesn't time their fsyncs.
+    * A temp dir pointed anywhere else is honoured, so a run that confines
+    * its scratch to one directory keeps its checkpoints there too. (A
+    * production stream points its checkpoint at durable storage — the
+    * location is deployment config, not semantics.)
+    */
+  def checkpointRoot(tmpdir: String,
+      shm: java.io.File = new java.io.File("/dev/shm")): String =
+    if (java.nio.file.Paths.get(tmpdir).normalize() == java.nio.file.Paths.get("/tmp") &&
+        shm.isDirectory) shm.getPath
+    else tmpdir
+
+  /** Starts a stream on a fresh checkpoint directory under
+    * [[checkpointRoot]], waits for it to finish and removes the directory.
+    * Unique per run: a reused checkpoint would pin the FIRST run's source
+    * path and offsets, which is exactly wrong for a throwaway drive.
+    */
+  private def withThrowawayCheckpoint(name: String)(start: String => StreamingQuery): Unit = {
+    val ckDir = new java.io.File(checkpointRoot(System.getProperty("java.io.tmpdir")),
+      s"graft-ck-$name-${java.util.UUID.randomUUID().toString.take(8)}")
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+    }
+    try start(ckDir.getAbsolutePath).awaitTermination()
+    finally rm(ckDir)
   }
 }

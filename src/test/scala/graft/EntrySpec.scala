@@ -9,4 +9,13 @@ class EntrySpec extends AnyFunSuite {
     assert(df.columns.toSeq == Seq("station_id", "n", "mean_temp"))
     assert(df.count() > 0)
   }
+
+  test("unknown query names fail up front, all of them listed") {
+    SparkEntry.requireKnownQueries(Seq("d8_dup_clusters", "c13_containment_unified"))
+    SparkEntry.requireKnownQueries(Nil)
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.requireKnownQueries(Seq("d8_dup_clusters", "d8_dup_clustrs", "nope", "nope"))
+    }
+    assert(e.getMessage.contains("unknown query name(s): d8_dup_clustrs, nope ("))
+  }
 }

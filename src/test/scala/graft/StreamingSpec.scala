@@ -68,4 +68,15 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toList
     assert(got.sortBy(_.toString) == want.sortBy(_.toString)) // once per key, no dupes
   }
+
+  test("throwaway checkpoints go on tmpfs only when the temp dir is the default /tmp") {
+    val shm = java.nio.file.Files.createTempDirectory("graft_shm").toFile
+    val noShm = new java.io.File(shm, "absent")
+    assert(StreamingWindows.checkpointRoot("/tmp", shm) == shm.getPath)
+    assert(StreamingWindows.checkpointRoot("/tmp/", shm) == shm.getPath)
+    assert(StreamingWindows.checkpointRoot("/tmp", noShm) == "/tmp")
+    assert(StreamingWindows.checkpointRoot("/data/scratch", shm) == "/data/scratch")
+    assert(StreamingWindows.checkpointRoot("/tmp/run-1", shm) == "/tmp/run-1")
+    shm.delete()
+  }
 }
