@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.engine.Caches
 import graft.functions.Hashing
 import graft.io.Sources
 import graft.ops.{Augment, Calibration, Features, Split}
@@ -19,7 +20,9 @@ import graft.ops.{Augment, Calibration, Features, Split}
   *
   * Unlike the reference (seven eagerly-materialized stages, deepcopy between
   * them), stages 1–4 fuse into one whole-stage-codegen'd scan→join→explode→
-  * project plan; only the split's count and the final action materialize.
+  * project plan; only the split's registered frames (its range-partitioned
+  * input and, with augmentation, the split itself, both built when
+  * registered) and the final action materialize.
   */
 object Pipeline {
 
@@ -86,9 +89,10 @@ object Pipeline {
     val split = Split.exact(f, "sample_key", cfg.trainFraction, cfg.seed)
     if (!cfg.augment) split.withColumn("aug_k", lit(0))
     else {
-      // Persisted: the train and test branches both read the split, and the
-      // split's global row-number sort should run once, not per branch.
-      val s = split.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // Registered: the train and test branches both read the split, and the
+      // split's global row-number sort should run once, not per branch; the
+      // caller's Caches.releaseAll drops it.
+      val s = Caches.persisted(split)
       val train = Augment.fanOut4(
         s.filter(col("is_train") === 1), "sample_key", cfg.seed)
       val test = s.filter(col("is_train") === 0).withColumn("aug_k", lit(0))

@@ -1,9 +1,39 @@
 package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+
+import graft.engine.Caches
+
 /** Prints physical-plan facts for the declared queries: scan pushdown,
   * partition pruning, join strategies, exchanges, codegen coverage.
   * Run: sbt "runMain graft.PlanAudit [query...]"
   */
 object PlanAudit {
+
+  /** Tree text of a physical plan. An adaptive plan prints its current plan
+    * only: the final one once it ran, where its own string would repeat
+    * the initial plan beneath it.
+    */
+  def planText(plan: SparkPlan): String = plan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan.toString
+    case p => p.toString
+  }
+
+  /** The executed plan of the query `build` returns, then the cached plans
+    * of the intermediates it registered while it was built
+    * (`Caches.registeredPlans`). The query's plan scans each registered
+    * frame as one leaf, so an audit of it alone would miss what runs
+    * inside them. Starts and ends with `Caches.releaseAll`.
+    */
+  def auditedPlans(build: => DataFrame): Seq[String] = {
+    Caches.releaseAll()
+    try {
+      val query = build.queryExecution.executedPlan.toString
+      query +: Caches.registeredPlans.map(planText)
+    } finally Caches.releaseAll()
+  }
 
   /** Lines proving the scan pruned partitions at listing time (a non-empty
     * `PartitionFilters: [...]` on a FileScan means whole directories are
@@ -34,7 +64,7 @@ object PlanAudit {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+      val plan = auditedPlans(SparkEntry.queries(name)(spark, dir)).mkString("\n")
       // plan_id annotations are unique per occurrence — strip them before
       // grouping or every AQE-annotated Exchange line counts as distinct
       // and the multiplicity rollup degenerates to a flood of "1x" rows.

@@ -5,7 +5,8 @@ package graft
   * optimization round commits alongside the bench numbers. Constructing a
   * lifecycle query's DataFrame runs its build phase (stores, streams); the
   * dump happens after construction, so the committed plan is the one the
-  * sink executes.
+  * sink executes. The cached plans of the intermediates the query
+  * registered (`Caches.registeredPlans`) follow it.
   *
   * Run: sbt "runMain graft.PlanDump <tag> <outDir> <query> [query...]";
   * SPARK_GRAFT_SF_DIR picks the scale (default sf0.1, the bench operating
@@ -25,9 +26,13 @@ object PlanDump {
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       val plan =
-        try fn(spark, dir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        catch { case e: Throwable =>
+        try {
+          val query = fn(spark, dir).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+          (query +: graft.engine.Caches.registeredPlans.zipWithIndex.map {
+            case (p, i) => s"== Registered intermediate $i ==\n${PlanAudit.planText(p)}"
+          }).mkString("\n")
+        } catch { case e: Throwable =>
           s"PLAN FAILED: ${e.getClass.getName}: ${e.getMessage}"
         }
       java.nio.file.Files.writeString(

@@ -2,7 +2,8 @@ package org.apache.spark.sql.classic
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 
 /** Narrow bridge into `private[sql]` classic internals, so graft can build
   * DataFrames from its own logical plan nodes (the supported pattern for
@@ -25,6 +26,52 @@ object GraftBridge {
 
   def queryExecution(df: org.apache.spark.sql.Dataset[_]): org.apache.spark.sql.execution.QueryExecution =
     df.asInstanceOf[Dataset[_]].queryExecution
+
+  /** Materialize the cache of an already-persisted `ds` and return a frame
+    * whose plan is one leaf over the cached scan, plus the cached physical
+    * plan (for audits). The leaf is `LogicalRDD.fromDataset` over the
+    * `InMemoryTableScan` row RDD, so consumers plan, explain and post AQE
+    * updates for a scan node instead of re-describing the whole cached
+    * subtree (an `InMemoryRelation` prints its cached AQE plan twice, and
+    * nested registrations double that per level). Statistics are read
+    * after the cache is built, so they are the materialized sizes, not
+    * optimizer estimates; partitioning and ordering are the cached plan's.
+    * The scan RDD keeps its lineage: once the cache is unpersisted, reading
+    * the leaf recomputes from the cached plan instead of failing. The
+    * materializing job is an RDD count outside any SQL execution, run under
+    * the session's job artifact state as a SQL execution is. Without it
+    * every registration's tasks ran in a new executor class loader, and the
+    * codegen cache, keyed by class loader, missed: a steady Landsat
+    * pipeline execution compiled 51 classes anew instead of none.
+    */
+  def materializedLeaf[T](ds: org.apache.spark.sql.Dataset[T])
+      : (org.apache.spark.sql.Dataset[T], SparkPlan) = {
+    val session = classicSession(ds.sparkSession)
+    val plan = ds.asInstanceOf[Dataset[T]].logicalPlan
+    session.withActive(session.artifactManager.withResources {
+      val relation = Dataset.ofRows(session, plan).queryExecution.withCachedData
+        match {
+          case r: InMemoryRelation => r
+          case other => throw new IllegalStateException(
+            s"frame is not persisted; its plan is ${other.nodeName}")
+        }
+      val rows = InMemoryTableScanExec(relation.output, Nil, relation).execute()
+      relation.cacheBuilder.cachedColumnBuffers.count()
+      // A fresh origin, planned only now, so its InMemoryRelation reports
+      // the loaded cache's size and row count.
+      val leaf = LogicalRDD.fromDataset(rows, Dataset.ofRows(session, plan),
+        ds.isStreaming)
+      (Dataset[T](session, leaf)(ds.encoder), relation.cachedPlan)
+    })
+  }
+
+  /** The id of the RDD under `ds` when its plan is one RDD-scan leaf (a
+    * frame that [[materializedLeaf]] returned is one). */
+  def leafRddId(ds: org.apache.spark.sql.Dataset[_]): Option[Int] =
+    analyzed(ds) match {
+      case l: LogicalRDD => Some(l.rdd.id)
+      case _ => None
+    }
 
   /** Filesystem location of a catalog table — for maintenance rewrites
     * that must re-read a bucketed table's files as a PLAIN parquet scan

@@ -80,11 +80,12 @@ class GraphSpec extends AnyFunSuite {
   test("triangles reuse the canonical edge frame, not the upstream pipeline") {
     // The pair pipeline feeding triangles (LSH chain in d30) is expensive;
     // the operator must persist the canonical edge set and fan out from
-    // the CACHE — the plan references InMemoryTableScan, not N replays of
-    // the upstream plan.
+    // the CACHE — the plan scans the registered frames' leaves (Scan
+    // ExistingRDD) and never replays the upstream input (LocalTableScan).
     val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("doc_a", "doc_b")
     val plan = Graph.triangles(pairs).queryExecution.executedPlan.toString
-    assert(plan.contains("InMemoryTableScan"))
+    assert(plan.contains("Scan ExistingRDD"), plan)
+    assert(!plan.contains("LocalTableScan"), plan)
     graft.engine.Caches.releaseAll()
   }
 

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.engine.Caches
 
 /** Plan-shape contract over the whole declared surface: nested-loop joins
   * are only ever the documented bounded broadcasts (one-row total
@@ -8,6 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * v1, broadcast centroid assignment in v4). A new BroadcastNestedLoopJoin
   * anywhere else — or any CartesianProduct at all — is an unbounded
   * all-pairs shape that cannot survive 100 TB, and fails this suite.
+  * Both gates read each query's executed plan AND the cached plans of the
+  * intermediates it registered, which its plan scans as leaves.
   */
 class PlanAuditSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -176,31 +182,62 @@ class PlanAuditSpec extends AnyFunSuite {
                       // gate adds no row-level lambda
   )
 
+  /** Each query's audited plans: its executed plan and the cached plans of
+    * the intermediates it registered (`PlanAudit.auditedPlans`). Built once
+    * for both gates.
+    */
+  private def audited(queries: Seq[(String, () => DataFrame)]): Seq[(String, Seq[String])] =
+    queries.map { case (name, build) => name -> PlanAudit.auditedPlans(build()) }
+
+  private lazy val declared = audited(SparkEntry.queries.toSeq.sortBy(_._1)
+    .map { case (name, fn) => name -> (() => fn(spark, dir)) })
+
+  private def lambdaOffenders(plans: Seq[(String, Seq[String])]): Seq[String] =
+    plans.filterNot(q => allowedInterpreted(q._1)).flatMap { case (name, texts) =>
+      texts.flatMap(PlanAudit.interpretedLambdaProjects).headOption
+        .map(l => s"$name: $l")
+    }
+
+  private def nestedLoopOffenders(plans: Seq[(String, Seq[String])]): Seq[String] =
+    plans.flatMap { case (name, texts) =>
+      val lines = texts.flatMap(_.linesIterator)
+      val bnlj = lines.count(_.contains("BroadcastNestedLoopJoin"))
+      val cart = lines.count(_.contains("CartesianProduct"))
+      val cap = allowedBnlj.getOrElse(name, 0)
+      (if (cart > 0) Seq(s"$name: ${cart}x CartesianProduct") else Nil) ++
+        (if (bnlj > cap) Seq(s"$name: ${bnlj}x BroadcastNestedLoopJoin " +
+          s"(allowed $cap)") else Nil)
+    }
+
   test("corpus-scale plans contain no interpreted per-element lambdas") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(q => allowedInterpreted(q._1))
-      .flatMap { case (name, fn) =>
-        val plan = fn(spark, dir).queryExecution.executedPlan.toString
-        PlanAudit.interpretedLambdaProjects(plan).headOption
-          .map(l => s"$name: $l")
-      }
+    val offenders = lambdaOffenders(declared)
     assert(offenders.isEmpty,
       s"interpreted lambda on a hot path: ${offenders.mkString("; ")}")
   }
 
   test("nested-loop joins only appear as documented bounded broadcasts") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan = fn(spark, dir).queryExecution.executedPlan.toString
-        val bnlj = plan.linesIterator
-          .count(_.contains("BroadcastNestedLoopJoin"))
-        val cart = plan.linesIterator.count(_.contains("CartesianProduct"))
-        val cap = allowedBnlj.getOrElse(name, 0)
-        (if (cart > 0) Seq(s"$name: ${cart}x CartesianProduct") else Nil) ++
-          (if (bnlj > cap) Seq(s"$name: ${bnlj}x BroadcastNestedLoopJoin " +
-            s"(allowed $cap)") else Nil)
-    }
+    val offenders = nestedLoopOffenders(declared)
     assert(offenders.isEmpty,
       s"unbounded nested-loop shapes: ${offenders.mkString("; ")}")
+  }
+
+  test("offenders planted inside a registered frame fail both gates") {
+    // The consumer's own plan only scans the registered frame's leaf; the
+    // offenders are visible in the registered frame's cached plan alone.
+    import spark.implicits._
+    val planted = audited(Seq("planted" -> (() => {
+      val ids = spark.range(0, 200).toDF("id")
+      val inner = Caches.persisted(ids
+        .select(col("id"), expr("transform(array(id, id + 1), x -> x * 2)").as("xs"))
+        .crossJoin(Seq(1L, 2L).toDF("m"))
+        .join(ids.withColumnRenamed("id", "id2"), col("id") < col("id2")))
+      inner.groupBy("m").agg(count(lit(1)).as("n"))
+    })))
+    val Seq((_, query +: registered)) = planted
+    assert(registered.nonEmpty)
+    assert(PlanAudit.interpretedLambdaProjects(query).isEmpty)
+    assert(!query.contains("NestedLoopJoin") && !query.contains("CartesianProduct"))
+    assert(lambdaOffenders(planted).nonEmpty)
+    assert(nestedLoopOffenders(planted).nonEmpty)
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Date
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -110,19 +112,26 @@ class SplitFeaturesSpec extends AnyFunSuite {
       .withColumn("_shuf", Split.shuffleKey($"k", 7L))
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "5")
+    graft.engine.Caches.releaseAll()
     try {
       // AQE may coalesce the tiny shuffle at runtime (desired), so assert
-      // the REQUESTED count on the logical plan, not the runtime count.
+      // the REQUESTED count on the plan, not the runtime count. The range-
+      // partitioned frame is registered (Caches.persisted), so the request
+      // is on the exchange of its cached plan; the result scans it as a leaf.
       val out = Split.globalRowNumber(df, "_shuf", "k")
-      val requested = out.queryExecution.analyzed.collect {
-        case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression =>
-          r.optNumPartitions
-      }.flatten
+      val requested = graft.engine.Caches.registeredPlans.flatMap(p =>
+        PlanHelper.collect(p) {
+          case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM =>
+            e.outputPartitioning.numPartitions
+        })
       assert(requested.contains(5))
       // ... and the numbering itself is invariant to the setting.
       val rns = out.select("rn").as[Long].collect().sorted
       assert(rns.toSeq == (1L to 500L))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", before)
+      graft.engine.Caches.releaseAll()
+    }
   }
 
   test("firstMatchGroundTruths keeps the first row per key in input order") {
@@ -284,3 +293,6 @@ class SplitFeaturesSpec extends AnyFunSuite {
     }
   }
 }
+
+/** Plan traversal that descends into adaptive plans and query stages. */
+private object PlanHelper extends AdaptiveSparkPlanHelper
