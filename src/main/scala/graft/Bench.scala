@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** True sample median — averages the two middle elements for even
@@ -22,7 +21,9 @@ object Bench {
     * shuffle/iteration-heavy query 1.5–2× while scan-light queries moved
     * ~6%. Emitting the probe with the sweep makes that weather
     * attributable in the artifact itself. The burn is warmed once so the
-    * solo baseline is JIT-compiled before it is timed.
+    * solo baseline is JIT-compiled before it is timed, and the baseline is
+    * the fastest of several solo burns: one solo sample slowed by a JIT or
+    * GC thread would otherwise push `n × solo / wall` past `n`.
     */
   def effectiveCores(): Double = {
     val n = Runtime.getRuntime.availableProcessors()
@@ -35,7 +36,7 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     burn() // JIT warmup
-    val solo = burn()
+    val solo = Seq.fill(5)(burn()).min
     val t0 = System.nanoTime()
     val threads = (1 to n).map(_ => new Thread(() => { burn(); () }))
     threads.foreach(_.start()); threads.foreach(_.join())
@@ -46,27 +47,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     SparkEntry.requireKnownQueries(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     // Weather probe BEFORE the sweep (and again after — a 12-minute sweep
     // can cross a weather change): effective cores at full fan-out.
     val ecBefore = effectiveCores()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Static conf, default 100 generated classes: with ~100 declared
-      // queries the warmup pass's compiled plans are evicted before the
-      // timed pass reaches them, silently re-measuring Janino compilation
-      // instead of execution (r04: c1 10.7 s timed vs 2.6 s steady-state).
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // ContextCleaner reclaims broadcasts/shuffle state only after a GC
-      // notices the weak refs; a 100+-query sweep otherwise accumulates
-      // until the old gen fills and full-GC storms multiply later queries'
-      // wall time (default interval 30min never fires in a sweep).
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Session.local's conf is the sweep's: its codegen cache sized past
+    // the declared query count and its 2min ContextCleaner interval.
+    val spark = graft.engine.Session.local()
     // Warmup phase: read every table family once, then run EVERY query once
     // un-timed. A query's first execution pays Catalyst + Janino whole-stage
     // codegen compilation and JVM JIT (measured at 0.3-1.5 s per query —

@@ -11,9 +11,7 @@ object BenchOne {
     val reps = if (args.length > 1) args(1).toInt else 5
     SparkEntry.requireKnownQueries(Seq(name))
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.engine.Session.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Session.local()
     val fn = SparkEntry.queries(name)
     val times = (1 to reps).map { _ =>
       spark.catalog.clearCache()

@@ -19,9 +19,7 @@ object JobAudit {
   def main(args: Array[String]): Unit = {
     SparkEntry.requireKnownQueries(args.toSeq)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.engine.Session.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Session.local()
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)

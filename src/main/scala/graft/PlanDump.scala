@@ -19,9 +19,7 @@ object PlanDump {
     val names = args.drop(2)
     SparkEntry.requireKnownQueries(names.toSeq)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.engine.Session.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Session.local()
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -34,9 +34,7 @@ object ScaleProbe {
     require((!deep && !deep4) || qArgs.nonEmpty,
       "--deep/--deep4 need explicit query names")
     SparkEntry.requireKnownQueries(qArgs)
-    val spark = graft.engine.Session.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Session.local()
 
     /** mult-x documents replica (replica k suffixes every token with k,
       * so shingles/signatures stay distinct across replicas — the corpus

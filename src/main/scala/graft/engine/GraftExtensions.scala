@@ -1,92 +1,20 @@
 package graft.engine
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{DotProductExpr, FreqItemsAgg, Int8QuantizeExpr, PolyHashExpr, PolyShinglesExpr, VectorMinAgg, VectorSumAgg}
-import graft.plans.{AsOfJoinStrategy, PushFilterThroughAsOfJoin}
+import graft.plans.AsOfJoinStrategy
 
-/** Spark-native deployment hook: register graft's Catalyst expressions via
-  * `spark.sql.extensions=graft.engine.GraftExtensions` so any session —
-  * including spark-submit / Thrift / connect sessions the library never
-  * touches programmatically — gets the functions. `Functions.registerAll`
-  * remains for sessions created by other drivers (e.g. the verify harness).
+/** Spark-native deployment hook: `spark.sql.extensions=graft.engine.GraftExtensions`
+  * gives any session, including spark-submit, Thrift and Connect sessions the
+  * library never touches programmatically, the same surface `Functions.install`
+  * registers: every entry of `Functions.table`, plus the as-of join strategy and
+  * rules. It declares nothing of its own. `Session.prepare` on such a session
+  * finds all of it present and adds nothing.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[PolyHashExpr].getName, null, name, usage, "")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_poly_hash"),
-      info("graft_poly_hash", "polynomial rolling hash of a string -> bigint"),
-      (exprs: Seq[Expression]) => PolyHashExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      info("graft_dot", "sequential dot product of two array<double>"),
-      (exprs: Seq[Expression]) => DotProductExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_int8_quantize"),
-      info("graft_int8_quantize", "one-pass int8 quantization summary of array<double>"),
-      (exprs: Seq[Expression]) => Int8QuantizeExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingle_hashes"),
-      info("graft_shingle_hashes", "polyhash of every word-n-gram shingle"),
-      (exprs: Seq[Expression]) => PolyShinglesExpr(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnow"),
-      info("graft_winnow", "distinct winnowed fingerprints (sliding-window minima) of word-n-gram hashes"),
-      (exprs: Seq[Expression]) => graft.functions.WinnowExpr(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int],
-        exprs(2).eval(null).asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnow_fps"),
-      info("graft_winnow_fps", "one-pass (n_shingles, winnowed fingerprints) struct"),
-      (exprs: Seq[Expression]) => graft.functions.WinnowFpsExpr(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int],
-        exprs(2).eval(null).asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnow_stats"),
-      info("graft_winnow_stats", "per-doc winnowing gate stats: n_shingles, n_fp, xor_fp"),
-      (exprs: Seq[Expression]) => graft.functions.WinnowStatsExpr(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int],
-        exprs(2).eval(null).asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      info("graft_bloom_agg", "Bloom filter aggregate over join keys (runtime-filter kernel)"),
-      (exprs: Seq[Expression]) => new org.apache.spark.sql.catalyst.expressions
-        .aggregate.BloomFilterAggregate(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      info("graft_might_contain", "Bloom filter membership probe"),
-      (exprs: Seq[Expression]) => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_vec_sum"),
-      info("graft_vec_sum", "element-wise sum aggregate of array<double>"),
-      (exprs: Seq[Expression]) => VectorSumAgg(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_vec_min"),
-      info("graft_vec_min", "element-wise min aggregate of array<long>"),
-      (exprs: Seq[Expression]) => VectorMinAgg(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_freq_items"),
-      info("graft_freq_items", "bounded-memory top-k frequent items sketch"),
-      (exprs: Seq[Expression]) => FreqItemsAgg(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("graft_asof"),
-      info("graft_asof", "as-of join marker: backward, in a JOIN condition"),
-      (exprs: Seq[Expression]) => graft.plans.GraftAsOfCond(exprs, forward = false)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_asof_fwd"),
-      info("graft_asof_fwd", "as-of join marker: forward, in a JOIN condition"),
-      (exprs: Seq[Expression]) => graft.plans.GraftAsOfCond(exprs, forward = true)))
-    // Whole-operator extension: as-of join planner strategy + rewrite/pushdown rules.
+    Functions.table.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteAsOfMarkerJoin)
-    ext.injectOptimizerRule(_ => PushFilterThroughAsOfJoin)
+    Functions.asOfRules.foreach(rule => ext.injectOptimizerRule(_ => rule))
   }
 }

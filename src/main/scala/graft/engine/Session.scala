@@ -11,7 +11,11 @@ import org.apache.spark.sql.SparkSession
   * (reference analog: data_processor.py:48-51 reads only metadata groups).
   */
 object Session {
-  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
+  /** The one session conf: the tests, `Verify`, `Bench` and the other mains
+    * all start here. `cpus` sets `local[cpus]` and the shuffle partitions.
+    */
+  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)): SparkSession = {
     val b = SparkSession
       .builder()
       .master(s"local[$cpus]")
@@ -36,24 +40,26 @@ object Session {
       // Static conf, defaults to 100: a long-running engine serving ~100
       // distinct plan shapes thrashes the generated-class cache at the
       // default, re-paying Janino compilation (seconds per query) on every
-      // execution. Sized for the full declared surface with headroom.
+      // execution; a sweep's warm-up pass would see its compiled plans
+      // evicted before the timed pass reaches them (r04: c1 10.7 s timed vs
+      // 2.6 s steady). Sized for the full declared surface with headroom.
       .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // Keep the ContextCleaner draining during long many-query sessions
-      // (broadcast/shuffle state is reclaimed only after a GC notices the
-      // weak refs; the 30min default never fires in a test/audit sweep).
-      // 10min here — a periodic System.gc() is a stop-the-world pause, so
-      // the shared session stays mild; the sweep mains (Bench/Verify) run
-      // the aggressive 2min interval where the accumulation actually is.
-      .config("spark.cleaner.periodicGC.interval", "10min")
+      // Keep the ContextCleaner draining during long many-query sessions:
+      // broadcast/shuffle state is reclaimed only after a GC notices the
+      // weak refs, and at the 30min default a 100+-query sweep accumulates
+      // until the old gen fills and full-GC storms multiply later queries'
+      // wall time. 2min is the interval the sweeps were measured with; a
+      // run shorter than that never sees the timer fire.
+      .config("spark.cleaner.periodicGC.interval", "2min")
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Functions.registerAll(spark)
-    graft.ops.AsOf.install(spark)
+    Functions.install(spark)
     spark
   }
 
-  /** Apply graft conf + function registry to an externally-created session
-    * (the driver's Verify/Bench sessions). Idempotent.
+  /** Apply graft conf + the function table, strategy and rules to a session
+    * created elsewhere (a library user's, or one built through
+    * `GraftExtensions`). Idempotent: every declared query calls it.
     */
   def prepare(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -61,8 +67,7 @@ object Session {
     spark.conf.set("spark.sql.ansi.enabled", "false")
     // see local(): one-file-per-bucket layout → sorted bucketed scans
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    Functions.registerAll(spark)
-    graft.ops.AsOf.install(spark)
+    Functions.install(spark)
     spark
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.functions.{col, unix_micros, when}
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
-import graft.plans.{AsOfJoin, AsOfJoinStrategy, PushFilterThroughAsOfJoin}
+import graft.plans.AsOfJoin
 
 /** User-facing as-of join (pandas `merge_asof` semantics, backward
   * direction): every left row gains the right row with equal `on` keys and
@@ -19,17 +19,12 @@ import graft.plans.{AsOfJoin, AsOfJoinStrategy, PushFilterThroughAsOfJoin}
   *
   * Scale: executes as [[graft.plans.AsOfJoinExec]] — hash-partition both
   * sides on `on`, sort by (keys, time), one-pass merge per partition. See
-  * that node's docs for why this is the 100 TB-safe plan.
+  * that node's docs for why this is the 100 TB-safe plan. The planner
+  * strategy and rules it needs install with graft's function table: each
+  * join calls the idempotent `engine.Functions.install`, which finds them
+  * already present on a `Session` or `GraftExtensions` session.
   */
 object AsOf {
-
-  /** Install the as-of planner strategy + optimizer rule into a session.
-    * Idempotent; `Session.prepare`/`Session.local` call it, as does
-    * `GraftExtensions` via `spark.sql.extensions`.
-    */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftBridge.install(spark, AsOfJoinStrategy,
-      Seq(graft.plans.RewriteAsOfMarkerJoin, PushFilterThroughAsOfJoin))
 
   def joinBackward(
       left: DataFrame,
@@ -123,7 +118,7 @@ object AsOf {
       forward: Boolean): DataFrame = {
     require(on.nonEmpty, "as-of join needs at least one equi-key")
     val spark = left.sparkSession
-    install(spark)
+    graft.engine.Functions.install(spark)
 
     // Fresh exprIds + disjoint names for the right side (self-join safety).
     val clash = right.columns.map(_ + rightSuffix).toSet intersect left.columns.toSet

@@ -17,8 +17,10 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
   *
   * Whole-operator stack per the extension preference order: this LogicalPlan
   * + [[PushFilterThroughAsOfJoin]] (Rule[LogicalPlan]) + [[AsOfJoinStrategy]]
-  * (SparkStrategy) + [[AsOfJoinExec]] (SparkPlan), installed either via
-  * `GraftExtensions` (spark.sql.extensions) or `Session.prepare`.
+  * (SparkStrategy) + [[AsOfJoinExec]] (SparkPlan), installed with graft's
+  * function table by `engine.Functions.install` (which `Session.local` and
+  * `Session.prepare` call) or injected by `GraftExtensions`
+  * (spark.sql.extensions).
   *
   * `rightTiebreak` columns break equal-`rightTime` ties deterministically
   * (the physical sort appends them; the merge keeps the last match in sort

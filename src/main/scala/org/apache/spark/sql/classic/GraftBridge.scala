@@ -87,16 +87,23 @@ object GraftBridge {
         org.apache.spark.sql.catalyst.TableIdentifier(table, Some(db)))
       .location.toString
 
-  /** Idempotently add a planner strategy + optimizer rules to a session. */
+  /** Idempotently add a planner strategy + optimizer rules to a session.
+    * What the session's planner or optimizer already holds is skipped,
+    * whether an earlier call added it to `experimental` or
+    * `spark.sql.extensions` injected it when the session was built.
+    */
   def install(
       spark: org.apache.spark.sql.SparkSession,
       strategy: SparkStrategy,
       rules: Seq[Rule[LogicalPlan]]): Unit = {
-    val em = classicSession(spark).experimental
+    val session = classicSession(spark)
+    val em = session.experimental
     em.synchronized {
-      if (!em.extraStrategies.contains(strategy))
+      if (!session.sessionState.planner.strategies.contains(strategy))
         em.extraStrategies = em.extraStrategies :+ strategy
-      val missing = rules.filterNot(em.extraOptimizations.contains)
+      val present = em.extraOptimizations ++
+        session.sessionState.optimizer.extendedOperatorOptimizationRules
+      val missing = rules.filterNot(present.contains)
       if (missing.nonEmpty)
         em.extraOptimizations = em.extraOptimizations ++ missing
     }

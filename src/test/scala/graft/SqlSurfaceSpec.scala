@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The registered function surface through plain `spark.sql` — what a user
-  * gets from `spark.sql.extensions=graft.engine.GraftExtensions` (same
-  * builders; Session.prepare registers them on this session).
+/** The registered function surface through plain `spark.sql`, on the
+  * shared session, where `Functions.install` registered it. The
+  * `spark.sql.extensions` route injects the same `Functions.table`;
+  * ExtensionRouteSpec checks that the two routes agree.
   */
 class SqlSurfaceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
