@@ -9,13 +9,19 @@ import graft.engine.Caches.Registered
 
 /** Deduplication operators for LLM-scale corpora over `documents`:
   * exact (hash-group), MinHash+LSH near-dup (shingle → K minhashes → banded
-  * buckets → bucket-join — never all-pairs), SimHash, and exact n-gram
-  * Jaccard verification of LSH candidates.
+  * buckets → bucket-join — never all-pairs), SimHash, exact n-gram
+  * Jaccard verification of LSH candidates, and containment scoring and
+  * removal.
   *
   * Scale design: every stage is a groupBy/join on bounded keys. The LSH
   * bucket join replaces the O(N²) pair enumeration with joins on
-  * (band, bandKey); skewed buckets (boilerplate shingles) are bounded by
-  * AQE skew-join handling; signatures are K=16 longs per doc.
+  * (band, bandKey); one builder, [[candidatePairs]], makes every LSH pair
+  * set, and its `skew` choice salts hot buckets known at plan time (AQE's
+  * skew-join split handles the rest); signatures are K=16 longs per doc.
+  * Containment is one pipeline of public seams — [[windowOcc]] →
+  * [[cappedWindowOcc]] → [[windowPairs]] or [[arrivalPairs]] → [[scored]]
+  * → [[relations]] or [[dropRows]] → [[dropRollup]] — that the d35, c10,
+  * c11 operators and the c12/c13/e21–e24 queries compose.
   */
 object Dedup {
 
@@ -103,17 +109,46 @@ object Dedup {
   def lshBandsPerRow(text: Column): Column =
     graft.functions.LshBandsExpr.column(lower(text), ShingleN, K, Bands)
 
+  /** How [[candidatePairs]] joins the bucket rows. `Plain` is the keyed
+    * self-join. `Hot` is the known-skew escape hatch for the LSH chain:
+    * one viral span (boilerplate footer, licence block) shared by a large
+    * slice of the corpus collapses those docs into the same (band,
+    * band_key) buckets, and the plain self-join lands the whole hot
+    * bucket on one task. `Hot` salts only the buckets holding more than
+    * `threshold` rows ([[Skew.saltedJoinHot]]); without a threshold the
+    * bucket histogram picks its own, max(floor, 8× mean bucket size). The
+    * long tail takes the plain keyed join, so build-side replication is
+    * S × hot-slice, proportional to the skew and not to the corpus. AQE's
+    * runtime skew-split handles moderate skew without this; the explicit
+    * form is for skew known at plan time.
+    */
+  sealed trait BucketSkew
+  case object Plain extends BucketSkew
+  final case class Hot(salts: Int, threshold: Option[Long] = None)
+    extends BucketSkew
+
   /** Candidate pairs (doc_a < doc_b) sharing ≥1 LSH bucket, with the count
     * of shared bands. Join is on (band, band_key) — never a cross product.
     * Each doc emits exactly one bucket row per band, so a pair can meet at
     * most once per band and plain count == count distinct — sparing the
     * distinct's extra aggregation pass. (Oracle keeps COUNT(DISTINCT); the
-    * values are identical.)
+    * values are identical.) Every `skew` meets each pair exactly once, so
+    * the result is row-identical across them (the d22/d23 gates).
     */
-  def candidatePairs(buckets: DataFrame): DataFrame = {
-    val a = buckets.select(col("band"), col("band_key"), col("doc_id").as("doc_a"))
-    val b = buckets.select(col("band"), col("band_key"), col("doc_id").as("doc_b"))
-    a.join(b, Seq("band", "band_key"))
+  def candidatePairs(buckets: DataFrame, skew: BucketSkew = Plain): DataFrame = {
+    // A salted join reads the bucket frame in its histogram, four hot/cold
+    // semi/anti legs and both join sides — persist it or each leg re-runs
+    // the whole LSH chain upstream.
+    val bk = if (skew == Plain) buckets else graft.engine.Caches.persisted(buckets)
+    val keys = Seq("band", "band_key")
+    val a = bk.select(col("band"), col("band_key"), col("doc_id").as("doc_a"))
+    val b = bk.select(col("band"), col("band_key"), col("doc_id").as("doc_b"))
+    val joined = skew match {
+      case Plain => a.join(b, keys)
+      case Hot(salts, None) => Skew.saltedJoinHot(a, b, keys, salts)
+      case Hot(salts, Some(t)) => Skew.saltedJoinHot(a, b, keys, salts, t)
+    }
+    joined
       .filter(col("doc_a") < col("doc_b"))
       .groupBy("doc_a", "doc_b")
       .agg(count(col("band")).as("n_bands"))
@@ -151,69 +186,6 @@ object Dedup {
         col("n_copies").as("copies_b")), "doc_b")
       // using-column joins float their key first; pin the pair layout
       .select("doc_a", "doc_b", "n_bands", "copies_a", "copies_b")
-  }
-
-  /** [[candidatePairs]] through the salted join — the known-skew escape
-    * hatch for the LSH chain: one viral span (boilerplate footer, licence
-    * block) shared by a large slice of the corpus collapses those docs
-    * into the same (band, band_key) buckets, and the plain self-join then
-    * lands the whole hot bucket on one task. DEFAULTS to the HOT-ONLY
-    * path ([[Skew.saltedJoinHot]] with the auto threshold from the bucket
-    * histogram): only buckets above max(floor, 8× mean size) are salted,
-    * so build-side replication is proportional to the skew itself, not
-    * the corpus — measured ~2× faster than salt-everything on the d22/d23
-    * scenario and the only shape that holds at 100 TB. Every pair still
-    * meets exactly once, so the result is row-identical to
-    * [[candidatePairs]] (the d22 gate). AQE's runtime skew-split handles
-    * moderate skew without this; the explicit form is for skew known at
-    * plan time — the difference between a straggler task holding 30% of
-    * the corpus and S even ones. For an input KNOWN to be uniformly hot
-    * (every bucket viral — no cold tail to spare), [[candidatePairsSaltedAll]]
-    * skips the histogram and salts everything.
-    */
-  def candidatePairsSalted(buckets: DataFrame, salts: Int): DataFrame = {
-    // The bucket frame feeds the histogram, four hot/cold semi/anti legs
-    // and both join sides — persist it or each leg re-runs the whole
-    // LSH chain upstream (idempotent if the caller already persisted:
-    // CacheManager dedups by plan).
-    val bk = graft.engine.Caches.persisted(buckets)
-    val a = bk.select(col("band"), col("band_key"), col("doc_id").as("doc_a"))
-    val b = bk.select(col("band"), col("band_key"), col("doc_id").as("doc_b"))
-    Skew.saltedJoinHot(a, b, Seq("band", "band_key"), salts)
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(col("band")).as("n_bands"))
-  }
-
-  /** Salt-EVERYTHING variant of [[candidatePairsSalted]] for inputs known
-    * to be uniformly hot: replicates the whole build side per salt,
-    * skipping the histogram pass the hot-only default pays.
-    */
-  def candidatePairsSaltedAll(buckets: DataFrame, salts: Int): DataFrame = {
-    val a = buckets.select(col("band"), col("band_key"), col("doc_id").as("doc_a"))
-    val b = buckets.select(col("band"), col("band_key"), col("doc_id").as("doc_b"))
-    Skew.saltedJoin(a, b, Seq("band", "band_key"), salts)
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(col("band")).as("n_bands"))
-  }
-
-  /** [[candidatePairsSalted]] through the HOT-ONLY salted path
-    * ([[Skew.saltedJoinHot]]) — the 100 TB form: the bucket histogram
-    * (one aggregate over the bucket frame) routes only buckets holding
-    * more than `threshold` rows through salting; the long tail takes the
-    * plain keyed join. Build-side replication shrinks from S × corpus to
-    * S × hot-slice — proportional to the skew, not the data — and the
-    * result stays row-identical to the plain join (the d23 gate).
-    */
-  def candidatePairsSaltedHot(buckets: DataFrame, salts: Int,
-      threshold: Long): DataFrame = {
-    val a = buckets.select(col("band"), col("band_key"), col("doc_id").as("doc_a"))
-    val b = buckets.select(col("band"), col("band_key"), col("doc_id").as("doc_b"))
-    Skew.saltedJoinHot(a, b, Seq("band", "band_key"), salts, threshold)
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(col("band")).as("n_bands"))
   }
 
   /** Estimated Jaccard from signature agreement for candidate pairs. */
@@ -1076,24 +1048,20 @@ object Dedup {
     * candidate, with window hashes above `maxWindowFreq` docs dropped
     * (the d31 hub discipline — viral boilerplate would otherwise build a
     * quadratic bucket). Emits both containment directions, the Jaccard
-    * for reference, and the classification — `near_dup` (high Jaccard),
-    * `containment` (one side mostly inside the other), `overlap` — with
-    * every threshold compared on the 6-dp ROUNDED values so the class is
-    * bit-stable cross-engine.
+    * for reference, and the [[relations]] classification.
     *
-    * Scale shape: one distinct-window pass, a frequency-capped keyed
-    * self-join on the window hash (pairs bounded by cap² per window),
-    * then d5's verify tail on the candidate slice only.
+    * Every containment operator composes the same seams: [[windowOcc]] →
+    * [[cappedWindowOcc]] → [[windowPairs]] (or the ingest probe,
+    * [[arrivalPairs]]) → [[scored]] → [[relations]] or [[dropRows]] →
+    * [[dropRollup]]. Scale shape: one distinct-window pass, a
+    * frequency-capped keyed self-join on the window hash (pairs bounded
+    * by cap² per window), then d5's verify tail on the candidate slice
+    * only.
     */
   def ngramContainment(docs: DataFrame, winN: Int = 10,
       maxWindowFreq: Int = 64): DataFrame =
-    containmentScored(docs, winN, maxWindowFreq)
-      .select(col("doc_a"), col("doc_b"), col("cont_a"), col("cont_b"),
-        col("jaccard"))
-      .withColumn("relation",
-        when(col("jaccard") >= 0.8, "near_dup")
-          .when(greatest(col("cont_a"), col("cont_b")) >= 0.8, "containment")
-          .otherwise("overlap"))
+    relations(scored(docs,
+      windowPairs(cappedWindowOcc(windowOcc(docs, winN), maxWindowFreq))))
 
   /** The per-row distinct `winN`-token window-hash array — the pure
     * function of the text both d35's batch candidate pass and e21's
@@ -1109,49 +1077,54 @@ object Dedup {
     * dedups h within each doc, and doc_id differs across rows, so the
     * exploded pairs are globally distinct by construction (guide §2.4: a
     * distinct on data that is already unique is an accidental exchange).
-    * Public so a query composing SEVERAL containment legs over one corpus
-    * slice (c13's survey + ingest decide) can build this frame ONCE.
     */
   def windowOcc(docs: DataFrame, winN: Int): DataFrame =
     docs.select(col("doc_id"),
       explode(windowHashesPerRow(col("text"), winN)).as("h"))
 
   /** [[windowOcc]] restricted to hashes at or under the frequency cap —
-    * the shared "capped occurrence" frame every containment candidate
-    * pass self- or probe-joins (the cap bounds a window's pair fan-out at
-    * cap²).
+    * the capped occurrence frame every containment candidate pass self-
+    * or probe-joins, and the frame the ingest queries store (the cap
+    * bounds a window's pair fan-out at cap²). The cap reads `occ` twice,
+    * in its frequency aggregate and in the join, so `occ` is persisted
+    * here; the capped frame is the caller's to persist when it has
+    * several consumers (c13's survey and ingest probe).
     */
-  def cappedWindowOcc(occ: DataFrame, maxWindowFreq: Int): DataFrame =
-    occ.join(
-      occ.groupBy("h").agg(count(lit(1)).as("wf"))
+  def cappedWindowOcc(occ: DataFrame, maxWindowFreq: Int): DataFrame = {
+    val o = graft.engine.Caches.persisted(occ)
+    o.join(
+      o.groupBy("h").agg(count(lit(1)).as("wf"))
         .filter(col("wf") <= maxWindowFreq).select("h"), "h")
-
-  /** Shared scored frame of d35/c10: the frequency-capped window-shared
-    * candidates through d5's verify tail, with BOTH rounded containment
-    * directions, the Jaccard, and the exact shingle-set sizes (the c10
-    * shorter-side tie-break key).
-    */
-  private def containmentScored(docs: DataFrame, winN: Int,
-      maxWindowFreq: Int): DataFrame = {
-    val occ = windowOcc(docs, winN).persistTracked()
-    scoredOfCapped(docs, cappedWindowOcc(occ, maxWindowFreq))
   }
 
-  /** The candidate self-join + verify tail over a prebuilt capped
-    * occurrence frame (caller owns its persistence) — the reuse seam for
-    * multi-leg containment queries.
+  /** The batch candidate pass: every (doc_a < doc_b) pair of documents
+    * sharing one capped window — a keyed self-join on the window hash.
     */
-  private def scoredOfCapped(docs: DataFrame, capped: DataFrame): DataFrame = {
-    val cand = capped.as("a").join(capped.as("b"), "h")
+  def windowPairs(capped: DataFrame): DataFrame =
+    capped.as("a").join(capped.as("b"), "h")
       .filter(col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    scoredOf(docs, cand)
-  }
 
-  /** d5's verify tail + both containment directions over an arbitrary
-    * (doc_a < doc_b) candidate set. */
-  private def scoredOf(docs: DataFrame, cand: DataFrame): DataFrame =
+  /** The ingest candidate pass: arrivals' `winN`-token windows probe a
+    * capped standing store of (h, doc_b) rows, giving every distinct
+    * (arrival, standing) pair that shares a window. The pair is oriented
+    * by role, not by id: doc_a is always the arriving side, the side
+    * [[arrivalContainmentDrops]] may drop.
+    */
+  def arrivalPairs(arrivals: DataFrame, store: DataFrame,
+      winN: Int): DataFrame =
+    arrivals.select(col("doc_id").as("doc_a"),
+        explode(windowHashesPerRow(col("text"), winN)).as("h"))
+      .join(store, Seq("h"))
+      .select("doc_a", "doc_b").distinct()
+
+  /** d5's verify tail over a (doc_a, doc_b) candidate set: both rounded
+    * containment directions, the Jaccard, and the exact shingle-set sizes
+    * (the drop side's tie-break key). Every threshold downstream compares
+    * these 6-dp ROUNDED values, so a decision is bit-stable cross-engine.
+    */
+  def scored(docs: DataFrame, cand: DataFrame): DataFrame =
     verifiedOverlapOf(docs, cand)
       .select(col("doc_a"), col("doc_b"),
         round(col("n_inter").cast("double") / col("n_a"), 6).as("cont_a"),
@@ -1160,107 +1133,91 @@ object Dedup {
           (col("n_a") + col("n_b") - col("n_inter")), 6).as("jaccard"),
         col("n_a"), col("n_b"))
 
-  /** e22's drop policy: [[containmentDrops]] with the dropped side PINNED
-    * to `doc_a` (the ARRIVING document of a cross-corpus candidate pair —
-    * every e22 candidate is (arrival, standing) with arrival ids below
-    * the standing band, so doc_a < doc_b already encodes the direction).
-    * An arrival is quarantined iff it is mostly inside some standing doc
-    * (cont_a ≥ minCont on the rounded value) without being a near-dup
-    * (jaccard < 0.8 — that band belongs to the dedup chain); an arrival
-    * that CONTAINS a standing doc is NOT dropped (new longer versions of
-    * standing content must land). Same provenance contract as c10: min
-    * standing container as the keeper witness, container count, max
-    * containment in exact e6 integers.
-    */
-  def arrivalContainmentDrops(all: DataFrame, cand: DataFrame,
-      minCont: Double = 0.8): DataFrame =
-    scoredOf(all, cand)
-      .filter(col("jaccard") < 0.8 && col("cont_a") >= minCont)
-      .groupBy(col("doc_a").as("doc_id"))
-      .agg(min("doc_b").as("keeper_id"),
-        count(lit(1)).as("n_containers"),
-        max(round(col("cont_a") * 1e6, 0).cast("long")).as("max_cont_e6"))
+  /** The near-dup band: these pairs belong to the dedup chain (c1), never
+    * to a containment drop. */
+  private def nearDup: Column = col("jaccard") >= 0.8
 
-  /** [[arrivalContainmentDrops]] with the threshold in exact e6 INTEGER
-    * space — the form a corpus-DERIVED operating point arrives in (c11's
-    * chosen rung is an e6 integer by construction, and comparing the
-    * 6-dp-rounded containment as its lossless integer form keeps the cut
-    * bit-reproducible in any engine instead of trusting a double literal
-    * at the rung boundary). This is the c13 unification seam: the batch
-    * survey chooses the rung, the ingest decide applies it unchanged.
-    */
-  def arrivalContainmentDropsE6(all: DataFrame, cand: DataFrame,
-      minContE6: Long): DataFrame =
-    scoredOf(all, cand)
-      .filter(col("jaccard") < 0.8 &&
-        round(col("cont_a") * 1e6, 0).cast("long") >= minContE6)
-      .groupBy(col("doc_a").as("doc_id"))
-      .agg(min("doc_b").as("keeper_id"),
-        count(lit(1)).as("n_containers"),
-        max(round(col("cont_a") * 1e6, 0).cast("long")).as("max_cont_e6"))
+  /** A 6-dp rounded score as its lossless e6 integer. */
+  private def e6(score: Column): Column = round(score * 1e6, 0).cast("long")
 
-  /** d35's verify tail + classification over an EXTERNAL candidate pair
-    * set (doc_a < doc_b) — the batch kernel of the streaming containment
-    * probe (e21): candidates arrive from the stream-static window-hash
-    * store probe; everything downstream of candidacy is [[ngramContainment]]
-    * unchanged, which is exactly the gate (same oracle as d35).
+  /** d35's classification of [[scored]] pairs: `near_dup` (high Jaccard),
+    * `containment` (one side mostly inside the other), `overlap`.
     */
-  def containmentVerify(docs: DataFrame, cand: DataFrame): DataFrame =
-    scoredOf(docs, cand)
-      .select(col("doc_a"), col("doc_b"), col("cont_a"), col("cont_b"),
-        col("jaccard"))
-      .withColumn("relation",
-        when(col("jaccard") >= 0.8, "near_dup")
-          .when(greatest(col("cont_a"), col("cont_b")) >= 0.8, "containment")
-          .otherwise("overlap"))
+  def relations(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_a"), col("doc_b"), col("cont_a"), col("cont_b"),
+      col("jaccard"),
+      when(nearDup, "near_dup")
+        .when(greatest(col("cont_a"), col("cont_b")) >= 0.8, "containment")
+        .otherwise("overlap").as("relation"))
 
-  /** c10: CONTAINMENT REMOVAL — the action d35's scan implies (the
-    * c-family discipline: every scan gets its removal — d32→c9, c1→c8).
-    * Policy, decided per CONTAINMENT pair (jaccard < 0.8 on the rounded
-    * value — near-dup pairs already belong to the c1 dedup chain — and
-    * max rounded containment ≥ `minCont`): the CONTAINED side is dropped —
-    * the side with the higher containment, which is by construction the
-    * shorter document (cont = n_inter / n_own; same n_inter, smaller set
-    * ⇒ larger cont); exact containment ties break to the smaller shingle
-    * set, then to the LARGER doc_id (the survivor is the smaller id, c8's
-    * keeper convention). One report row per dropped doc with c8's
-    * provenance contract: the deterministic keeper witness (min container
-    * id), how many containers matched, and the strongest containment in
-    * exact e6 integer space.
-    *
-    * A container that is itself contained elsewhere still appears as a
+  /** c10's drop side of every non-near-dup [[scored]] pair: the CONTAINED
+    * side is dropped — the side with the higher containment, which is by
+    * construction the shorter document (cont = n_inter / n_own; same
+    * n_inter, smaller set ⇒ larger cont); exact containment ties break to
+    * the smaller shingle set, then to the LARGER doc_id (the survivor is
+    * the smaller id, c8's keeper convention). One row per pair:
+    * (doc_id, container, cont_e6), the pair's max containment in exact e6
+    * integers. Lazy; a caller reading it twice materializes it (c11).
+    */
+  def dropRows(pairs: DataFrame): DataFrame = {
+    val dropA = when(col("cont_a") =!= col("cont_b"), col("cont_a") > col("cont_b"))
+      .when(col("n_a") =!= col("n_b"), col("n_a") < col("n_b"))
+      .otherwise(col("doc_a") > col("doc_b"))
+    pairs.filter(!nearDup)
+      .select(when(dropA, col("doc_a")).otherwise(col("doc_b")).as("doc_id"),
+        when(dropA, col("doc_b")).otherwise(col("doc_a")).as("container"),
+        e6(greatest(col("cont_a"), col("cont_b"))).as("cont_e6"))
+  }
+
+  /** One report row per dropped doc with c8's provenance contract: the
+    * deterministic keeper witness (min container id), how many containers
+    * matched, and the strongest containment in exact e6 integer space. A
+    * container that is itself contained elsewhere still appears as a
     * keeper witness — drops are pairwise facts; the transitive sweep is
     * the caller's policy (exactly like c8, where a keeper may itself fail
-    * the quality rule). Scale shape: d35's candidates (frequency-capped
-    * keyed self-join, cap² bound per window) + one keyed rollup over the
-    * drop slice — no new corpus-wide work.
+    * the quality rule).
     */
-  def containmentDrops(docs: DataFrame, winN: Int = 10,
-      maxWindowFreq: Int = 64, minCont: Double = 0.8): DataFrame =
-    containmentScored(docs, winN, maxWindowFreq)
-      .filter(col("jaccard") < 0.8 &&
-        greatest(col("cont_a"), col("cont_b")) >= minCont)
-      .select(
-        when(col("cont_a") > col("cont_b"), col("doc_a"))
-          .when(col("cont_b") > col("cont_a"), col("doc_b"))
-          .when(col("n_a") < col("n_b"), col("doc_a"))
-          .when(col("n_b") < col("n_a"), col("doc_b"))
-          .otherwise(greatest(col("doc_a"), col("doc_b"))).as("doc_id"),
-        when(col("cont_a") > col("cont_b"), col("doc_b"))
-          .when(col("cont_b") > col("cont_a"), col("doc_a"))
-          .when(col("n_a") < col("n_b"), col("doc_b"))
-          .when(col("n_b") < col("n_a"), col("doc_a"))
-          .otherwise(least(col("doc_a"), col("doc_b"))).as("container"),
-        round(greatest(col("cont_a"), col("cont_b")) * 1e6, 0)
-          .cast("long").as("cont_e6"))
-      .groupBy("doc_id")
+  def dropRollup(rows: DataFrame): DataFrame =
+    rows.groupBy("doc_id")
       .agg(min("container").as("keeper_id"),
         count(lit(1)).as("n_containers"),
         max("cont_e6").as("max_cont_e6"))
 
+  /** c10: CONTAINMENT REMOVAL — the action d35's scan implies (the
+    * c-family discipline: every scan gets its removal — d32→c9, c1→c8):
+    * [[dropRows]] of d35's candidates at rounded containment ≥
+    * `minContE6`, rolled up per dropped doc. Scale shape: d35's
+    * candidates (frequency-capped keyed self-join, cap² bound per window)
+    * + one keyed rollup over the drop slice — no new corpus-wide work.
+    */
+  def containmentDrops(docs: DataFrame, winN: Int = 10,
+      maxWindowFreq: Int = 64, minContE6: Long = 800000L): DataFrame =
+    dropRollup(dropRows(scored(docs,
+        windowPairs(cappedWindowOcc(windowOcc(docs, winN), maxWindowFreq))))
+      .filter(col("cont_e6") >= minContE6))
+
+  /** e22's drop policy: [[containmentDrops]] with the dropped side PINNED
+    * to `doc_a` (the ARRIVING document of an [[arrivalPairs]] pair). An
+    * arrival is quarantined iff it is mostly inside some standing doc
+    * (rounded cont_a ≥ `minContE6` in e6 integers) without being a
+    * near-dup (that band belongs to the dedup chain); an arrival that
+    * CONTAINS a standing doc is NOT dropped (new longer versions of
+    * standing content must land). The threshold is an e6 integer because
+    * a corpus-DERIVED operating point arrives in that form (c13 applies
+    * c11's surveyed rung unchanged), and comparing the 6-dp containment
+    * as its lossless integer keeps the cut bit-reproducible in any
+    * engine. Same provenance contract as c10 ([[dropRollup]]).
+    */
+  def arrivalContainmentDrops(all: DataFrame, cand: DataFrame,
+      minContE6: Long = 800000L): DataFrame =
+    dropRollup(scored(all, cand).filter(!nearDup)
+      .select(col("doc_a").as("doc_id"), col("doc_b").as("container"),
+        e6(col("cont_a")).as("cont_e6"))
+      .filter(col("cont_e6") >= minContE6))
+
   /** c11: [[containmentDrops]] at a CORPUS-DERIVED operating point — the
     * c5 chosen-rung discipline applied to the containment threshold:
-    * instead of a hand-set minCont, a ladder of e6-integer rungs surveys
+    * instead of a hand-set minContE6, a ladder of e6-integer rungs surveys
     * the corpus's own containment mass (per would-be-dropped doc, its max
     * pairwise containment over d35's scored chain) and the SMALLEST rung
     * whose drop count is at most 1/fracDen of the corpus becomes the
@@ -1273,68 +1230,29 @@ object Dedup {
     * (each 6-dp containment recovers its integer form losslessly) — the
     * survey and the cut are bit-reproducible in any engine.
     *
-    * Scale shape: d35's scored chain is computed ONCE (persisted) and
-    * feeds both the survey and the cut; the survey rollup is ≤ |ladder|
-    * rows, a model-sized driver decision (the kmeans-collect class).
+    * Scale shape: the drop rows are computed ONCE and feed both the
+    * survey and the cut; the survey rollup is ≤ |ladder| rows, a
+    * model-sized driver decision (the kmeans-collect class).
     */
   def containmentDropsAuto(docs: DataFrame, winN: Int = 10,
       maxWindowFreq: Int = 64, ladder: Seq[Long] = ContainmentLadder,
       fracDen: Long = 20L): DataFrame = {
-    val dropRows = containmentDropRows(docs, winN, maxWindowFreq)
-    val chosen = surveyContainmentRung(dropRows, docs.count(), ladder, fracDen)
-    dropRows.filter(col("cont_e6") >= chosen)
-      .groupBy("doc_id")
-      .agg(min("container").as("keeper_id"),
-        count(lit(1)).as("n_containers"),
-        max("cont_e6").as("max_cont_e6"))
+    // Materialized (eager localCheckpoint): the frame is tiny (one row per
+    // drop-candidate pair) and feeds two separate actions — the survey
+    // collect and the cut — and a lazy persist would leave the whole
+    // scored chain (with its nested candidate/verify caches) under the
+    // second action's lineage, re-deriving it.
+    val rows = dropRows(scored(docs,
+        windowPairs(cappedWindowOcc(windowOcc(docs, winN), maxWindowFreq))))
+      .localCheckpoint()
+    val chosen = surveyContainmentRung(rows, docs.count(), ladder, fracDen)
+    dropRollup(rows.filter(col("cont_e6") >= chosen))
       .withColumn("min_cont_e6", lit(chosen))
   }
 
   /** The default e6-integer threshold ladder of the c11 survey. */
   val ContainmentLadder: Seq[Long] =
     Seq(600000L, 700000L, 800000L, 900000L)
-
-  /** c11's drop-candidate frame: per containment-band pair (near-dups
-    * belong to the dedup chain), c10's drop-side selection with its
-    * tie-breaks, in e6 space. MATERIALIZED once (eager localCheckpoint):
-    * the frame is tiny (one row per drop-candidate pair) and feeds two
-    * separate actions — the survey collect and the cut — and a lazy
-    * persist would leave the whole scored chain (with its nested
-    * candidate/verify caches) under the second action's lineage,
-    * re-deriving it.
-    */
-  def containmentDropRows(docs: DataFrame, winN: Int = 10,
-      maxWindowFreq: Int = 64): DataFrame =
-    dropRowsOf(containmentScored(docs, winN, maxWindowFreq))
-
-  /** [[containmentDropRows]] over a PREBUILT capped occurrence frame
-    * ([[cappedWindowOcc]]; caller owns its persistence) — the c13 seam:
-    * the rung survey and the ingest decide probe the SAME standing
-    * corpus's capped windows, so the query builds occ/capped once and
-    * both legs consume it instead of each re-deriving the full
-    * window-hash explode + frequency cap (guide §1.2, §2.4).
-    */
-  def containmentDropRowsFromCapped(docs: DataFrame,
-      capped: DataFrame): DataFrame =
-    dropRowsOf(scoredOfCapped(docs, capped))
-
-  private def dropRowsOf(scored: DataFrame): DataFrame =
-    scored
-      .filter(col("jaccard") < 0.8)
-      .select(
-        when(col("cont_a") > col("cont_b"), col("doc_a"))
-          .when(col("cont_b") > col("cont_a"), col("doc_b"))
-          .when(col("n_a") < col("n_b"), col("doc_a"))
-          .when(col("n_b") < col("n_a"), col("doc_b"))
-          .otherwise(greatest(col("doc_a"), col("doc_b"))).as("doc_id"),
-        when(col("cont_a") > col("cont_b"), col("doc_b"))
-          .when(col("cont_b") > col("cont_a"), col("doc_a"))
-          .when(col("n_a") < col("n_b"), col("doc_b"))
-          .when(col("n_b") < col("n_a"), col("doc_a"))
-          .otherwise(least(col("doc_a"), col("doc_b"))).as("container"),
-        round(greatest(col("cont_a"), col("cont_b")) * 1e6, 0)
-          .cast("long").as("cont_e6"))
-      .localCheckpoint()
 
   /** The c11 rung survey, exposed so the BATCH-derived operating point can
     * be applied to OTHER passes (the c13 unification: one rung chosen from

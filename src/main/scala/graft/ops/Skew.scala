@@ -112,8 +112,8 @@ object Skew {
     * [[HotAutoFactor]] × mean key size). The mean rides the same
     * histogram aggregate as a one-row broadcast (no driver action, no
     * extra pass), so callers get replication ∝ skew without picking a
-    * magic row count — the form [[graft.ops.Dedup.candidatePairsSalted]]
-    * defaults to.
+    * magic row count — the form [[graft.ops.Dedup.candidatePairs]]
+    * takes for `Hot` without a threshold.
     */
   def saltedJoinHot(big: DataFrame, small: DataFrame, keys: Seq[String],
       salts: Int): DataFrame = {

@@ -38,9 +38,13 @@ case class GraftAsOfCond(children: Seq[Expression], forward: Boolean)
 
 /** Optimizer rule: JOIN ... ON <equi-keys> AND graft_asof(lt, rt[, tol])
   * becomes [[AsOfJoin]]. LEFT OUTER keeps as-of's native left-outer
-  * semantics; INNER adds a match filter. Runs in extraOptimizations, after
-  * the main batches — the marker references both sides, so no earlier rule
-  * can push it out of the join condition.
+  * semantics; INNER adds a match filter. `Functions.install` adds it to
+  * extraOptimizations, after the main batches; `GraftExtensions` injects it
+  * with `injectOptimizerRule`, which places it in the operator-optimization
+  * batch among the main rules. Either placement holds because the marker
+  * references both sides: no rule can push it out of the join condition
+  * (ExtensionRouteSpec runs the tolerance, forward and INNER variants on
+  * the extension route).
   */
 object RewriteAsOfMarkerJoin extends Rule[LogicalPlan] {
   private def conjuncts(e: Expression): Seq[Expression] = e match {
@@ -96,8 +100,15 @@ object RewriteAsOfMarkerJoin extends Rule[LogicalPlan] {
         case LeftOuter => aj
         case Inner =>
           // Matched rows carry the (non-null) right key / time; unmatched
-          // left rows carry nulls across the whole right output.
-          Filter(IsNotNull(rk.headOption.getOrElse(rt)), aj)
+          // left rows carry nulls across the whole right output. The test
+          // must read the join's nullable output attributes: over the right
+          // child's own non-nullable ones, an optimizer batch that runs
+          // after this rule (GraftExtensions places it among the main
+          // rules) folds IsNotNull to true and drops the filter.
+          val out = AttributeMap(aj.output.map(a => a -> a))
+          Filter(IsNotNull(rk.headOption.getOrElse(rt).transform {
+            case a: Attribute => out.getOrElse(a, a)
+          }), aj)
         case other => throw new IllegalArgumentException(
           s"as-of SQL join supports INNER and LEFT OUTER, got $other")
       }

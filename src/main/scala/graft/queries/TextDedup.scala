@@ -468,25 +468,12 @@ object TextDedup {
     // decade — containment ≈ .86/.75/.67/.60, real mass on every rung, so
     // the survey must genuinely choose (at sf0.01 it picks 800000: the
     // 700000 rung would drop 26 docs vs the 25-doc cap).
-    "c11_containment_auto" -> ((s, dir) => {
-      val base = docs(s, dir)
-      val src = base.select((col("doc_id") + 5).as("doc_id"),
-        slice(split(lower(col("text")), "\\s+"), 1, 20).as("_src"))
-      val m = (lit(3) * (lit(1) +
-        pmod(expr("doc_id div 10"), lit(4)))).cast("int")
+    "c11_containment_auto" -> ((s, dir) =>
       // Materialized once: the spectrum feeds three consumers inside the
       // auto op (the corpus count, the window-candidate pass, and the
       // verify re-shingle) — without it each re-runs the rewrite join.
-      val spectrum = base.join(src, Seq("doc_id"), "left")
-        .withColumn("text",
-          when(col("doc_id") % 10 === 7 && col("_src").isNotNull,
-            array_join(concat(col("_src"),
-              slice(split(lower(col("text")), "\\s+"), lit(1), m)), " "))
-            .otherwise(col("text")))
-        .select("doc_id", "text")
-        .localCheckpoint()
-      Dedup.containmentDropsAuto(spectrum)
-    }),
+      Dedup.containmentDropsAuto(
+        containmentSpectrum(docs(s, dir)).localCheckpoint())),
 
     // UNIFIED containment operating point — closes the c11↔e22 seam: c11
     // derives minCont from the corpus's own containment mass, but the
@@ -506,19 +493,8 @@ object TextDedup {
     // 0.8-by-fiat flips rows whenever the survey picks any other rung.
     "c13_containment_unified" -> ((s, dir) => {
       val base = docs(s, dir)
-      val srcS = base.select((col("doc_id") + 5).as("doc_id"),
-        slice(split(lower(col("text")), "\\s+"), 1, 20).as("_src"))
-      val m = (lit(3) * (lit(1) +
-        pmod(expr("doc_id div 10"), lit(4)))).cast("int")
       val standing = graft.engine.Caches.persisted(
-        base.filter(col("doc_id") >= LdsEvalSplit)
-          .join(srcS, Seq("doc_id"), "left")
-          .withColumn("text",
-            when(col("doc_id") % 10 === 7 && col("_src").isNotNull,
-              array_join(concat(col("_src"),
-                slice(split(lower(col("text")), "\\s+"), lit(1), m)), " "))
-              .otherwise(col("text")))
-          .select("doc_id", "text"))
+        containmentSpectrum(base).filter(col("doc_id") >= LdsEvalSplit))
       val exA = base.filter(col("doc_id") >= lit(100) && col("doc_id") % 2 === 0)
         .select(((col("doc_id") - 100) / 2).cast("long").as("doc_id"),
           array_join(slice(split(lower(col("text")), "\\s+"), 1, 30), " ")
@@ -530,36 +506,22 @@ object TextDedup {
             when(col("doc_id") % 5 === 2 && col("_ex").isNotNull, col("_ex"))
               .otherwise(col("text")))
           .select("doc_id", "text"))
-      // ONE standing window-hash occurrence frame + ONE frequency-capped
-      // frame feed BOTH legs (guide §1.2, §2.4): the rung survey's
-      // candidate self-join and the ingest decide's probe store consumed
-      // identical (winN = 10, cap = 64) subtrees that were previously
-      // each rebuilt from the raw standing corpus.
-      val occS = graft.engine.Caches.persisted(
-        Dedup.windowOcc(standing, 10))
+      // ONE frequency-capped standing window frame feeds BOTH legs (guide
+      // §1.2, §2.4): the rung survey's candidate self-join and the ingest
+      // decide's probe store consume the identical (winN = 10, cap = 64)
+      // subtree instead of each rebuilding it from the raw standing corpus.
       val capped = graft.engine.Caches.persisted(
-        Dedup.cappedWindowOcc(occS, 64))
+        Dedup.cappedWindowOcc(Dedup.windowOcc(standing, 10), 64))
       // The batch survey over the standing corpus picks the rung...
       val rung = Dedup.surveyContainmentRung(
-        Dedup.containmentDropRowsFromCapped(standing, capped),
+        Dedup.dropRows(Dedup.scored(standing, Dedup.windowPairs(capped))),
         standing.count())
-      // ...and the ingest decide applies it unchanged: e22's candidate
-      // shape (arrival windows probe the frequency-capped standing
-      // windows; the cap is a property of the standing slice).
-      val winStore = capped.select(col("h"), col("doc_id").as("doc_b"))
-      val cand = arrivals
-        .select(col("doc_id").as("doc_a"),
-          explode(Dedup.windowHashesPerRow(col("text"), 10)).as("h"))
-        .join(winStore, Seq("h"))
-        .select("doc_a", "doc_b").distinct()
-      val drops = Dedup.arrivalContainmentDropsE6(
-        standing.unionByName(arrivals), cand, minContE6 = rung)
-      arrivals.select("doc_id").join(drops, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("keeper_id").isNull.as("landed"),
-          col("keeper_id"),
-          coalesce(col("n_containers"), lit(0L)).as("n_containers"),
-          coalesce(col("max_cont_e6"), lit(0L)).as("max_cont_e6"),
-          lit(rung).as("min_cont_e6"))
+      // ...and the ingest decide applies it unchanged: arrival windows
+      // probe the frequency-capped standing windows (the cap is a
+      // property of the standing slice).
+      arrivalDecisions(arrivals, standing.unionByName(arrivals),
+          capped.select(col("h"), col("doc_id").as("doc_b")), rung)
+        .withColumn("min_cont_e6", lit(rung))
     }),
 
     // BATCH CURATION CAPSTONE — the c-family legs composed into ONE plan
@@ -608,21 +570,11 @@ object TextDedup {
         .select("doc_id").distinct()
       val s3 = s2.join(dirty, Seq("doc_id"), "left_anti")
         .localCheckpoint()
-      val s4 = s3.join(Dedup.containmentDrops(s3).select("doc_id"),
-          Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-      val pk = graft.ops.Split.packManifest(s4, "text", "doc_id", 512)
-        .agg(countDistinct("bin_id").as("n_windows"),
-          count(lit(1)).as("n_segments"),
-          sum("len").as("n_tokens"),
-          sum(col("bin_id") * col("len") + col("doc_offset") +
-            col("win_offset")).as("pack_checksum"))
       corpus.agg(count(lit(1)).as("n_total"))
         .crossJoin(s1.agg(count(lit(1)).as("after_gopher")))
         .crossJoin(s2.agg(count(lit(1)).as("after_exact")))
         .crossJoin(s3.agg(count(lit(1)).as("after_decontam")))
-        .crossJoin(s4.agg(count(lit(1)).as("after_containment")))
-        .crossJoin(pk)
+        .crossJoin(containmentPackFunnel(s3))
     }),
 
     // LSH OPERATING-POINT CALIBRATION (the band/row tuning report every
@@ -1396,16 +1348,9 @@ object TextDedup {
       s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$dbLoc'")
       graft.ops.Bucketing.reset(s, s"$db.win_bkt",
         new java.io.File(dbLoc, "win_bkt"))
-      // Persisted: the cap join consumes this frame TWICE (the wf groupBy
-      // side and the probe side) inside one write job — unpersisted, the
-      // corpus window-hash explode ran twice (guide §1.2).
-      val occ = graft.engine.Caches.persisted(
-        docs(s, dir).select(col("doc_id").as("doc_old"),
-          explode(Dedup.windowHashesPerRow(col("text"), 10)).as("h")))
       graft.ops.Bucketing.writeBucketed(
-        occ.join(occ.groupBy("h").agg(count(lit(1)).as("wf"))
-          .filter(col("wf") <= 64).select("h"), "h")
-          .select("h", "doc_old"),
+        Dedup.cappedWindowOcc(Dedup.windowOcc(docs(s, dir), 10), 64)
+          .select(col("h"), col("doc_id").as("doc_old")),
         s"$db.win_bkt", nBuckets = 8, keys = Seq("h"))
       val store = s.table(s"$db.win_bkt")
       graft.streaming.StreamingWindows.withStatePartitions(s, 4) {
@@ -1423,7 +1368,7 @@ object TextDedup {
           .select(least(col("doc_new"), col("doc_old")).as("doc_a"),
             greatest(col("doc_new"), col("doc_old")).as("doc_b"))
           .distinct()
-        Dedup.containmentVerify(docs(s, dir), cand)
+        Dedup.relations(Dedup.scored(docs(s, dir), cand))
       }
     }),
 
@@ -1451,34 +1396,16 @@ object TextDedup {
       // slice only — the cap is a property of the standing corpus).
       graft.ops.Bucketing.reset(s, s"$db.win_bkt",
         new java.io.File(dbLoc, "win_bkt"))
-      // Persisted: the cap join consumes this frame twice inside the one
-      // store-build write (the wf groupBy + the probe side) — guide §1.2.
-      val occS = graft.engine.Caches.persisted(
-        standing.select(col("doc_id").as("doc_b"),
-          explode(Dedup.windowHashesPerRow(col("text"), 10)).as("h")))
       graft.ops.Bucketing.writeBucketed(
-        occS.join(occS.groupBy("h").agg(count(lit(1)).as("wf"))
-          .filter(col("wf") <= 64).select("h"), "h")
-          .select("h", "doc_b"),
+        Dedup.cappedWindowOcc(Dedup.windowOcc(standing, 10), 64)
+          .select(col("h"), col("doc_id").as("doc_b")),
         s"$db.win_bkt", nBuckets = 8, keys = Seq("h"))
       val winStore = s.table(s"$db.win_bkt")
       // Decision store: one row per arrival, landed or quarantined.
       graft.ops.Bucketing.reset(s, s"$db.ingest_bkt",
         new java.io.File(dbLoc, "ingest_bkt"))
-      def decide(batch: DataFrame): DataFrame = {
-        val cand = batch
-          .select(col("doc_id").as("doc_a"),
-            explode(Dedup.windowHashesPerRow(col("text"), 10)).as("h"))
-          .join(winStore, Seq("h"))
-          .select("doc_a", "doc_b").distinct()
-        val drops = Dedup.arrivalContainmentDrops(
-          standing.unionByName(batch), cand)
-        batch.select("doc_id").join(drops, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("keeper_id").isNull.as("landed"),
-            col("keeper_id"),
-            coalesce(col("n_containers"), lit(0L)).as("n_containers"),
-            coalesce(col("max_cont_e6"), lit(0L)).as("max_cont_e6"))
-      }
+      def decide(batch: DataFrame): DataFrame =
+        arrivalDecisions(batch, standing.unionByName(batch), winStore)
       graft.ops.Bucketing.writeBucketed(decide(docs(s, dir).limit(0)),
         s"$db.ingest_bkt", nBuckets = 8, keys = Seq("doc_id"))
       val ledger = new java.io.File(Tables.scratch(db + "_ledger"))
@@ -1557,16 +1484,10 @@ object TextDedup {
       // landed arrivals below).
       graft.ops.Bucketing.reset(s, s"$db.win_bkt",
         new java.io.File(dbLoc, "win_bkt"))
-      // Persisted: the cap join consumes this frame twice inside the one
-      // store-build write (the wf groupBy + the probe side) — guide §1.2.
-      val occS = graft.engine.Caches.persisted(
-        standing.select(col("doc_id").as("doc_b"),
-          explode(Dedup.windowHashesPerRow(col("text"), 10)).as("h")))
       graft.engine.PhaseTimer.time("build") {
         graft.ops.Bucketing.writeBucketed(
-          occS.join(occS.groupBy("h").agg(count(lit(1)).as("wf"))
-            .filter(col("wf") <= 64).select("h"), "h")
-            .select("h", "doc_b"),
+          Dedup.cappedWindowOcc(Dedup.windowOcc(standing, 10), 64)
+            .select(col("h"), col("doc_id").as("doc_b")),
           s"$db.win_bkt", nBuckets = 8, keys = Seq("h"))
       }
       graft.ops.Bucketing.reset(s, s"$db.ingest_bkt",
@@ -1578,18 +1499,8 @@ object TextDedup {
         // explode AND the final doc_id join — unpersisted, each re-read
         // the micro-batch source and re-ran the mutate join (guide §1.2).
         val batch = graft.engine.Caches.persisted(mutate(batch0))
-        val cand = batch
-          .select(col("doc_id").as("doc_a"),
-            explode(Dedup.windowHashesPerRow(col("text"), 10)).as("h"))
-          .join(s.table(s"$db.win_bkt"), Seq("h"))
-          .select("doc_a", "doc_b").distinct()
-        val drops = Dedup.arrivalContainmentDrops(
-          standing.unionByName(arrAll), cand)
-        batch.select("doc_id").join(drops, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("keeper_id").isNull.as("landed"),
-            col("keeper_id"),
-            coalesce(col("n_containers"), lit(0L)).as("n_containers"),
-            coalesce(col("max_cont_e6"), lit(0L)).as("max_cont_e6"))
+        arrivalDecisions(batch, standing.unionByName(arrAll),
+          s.table(s"$db.win_bkt"))
       }
       graft.ops.Bucketing.writeBucketed(decide(base.limit(0)),
         s"$db.ingest_bkt", nBuckets = 8, keys = Seq("doc_id"))
@@ -1610,16 +1521,9 @@ object TextDedup {
         val landed = s.table(s"$db.ingest_bkt")
           .filter(col("landed") && col("doc_id") >= lo && col("doc_id") < hi)
           .select("doc_id")
-        // Persisted: the cap join consumes this frame twice inside the
-        // one extension append (the wf groupBy + the probe side) —
-        // unpersisted, the landed window's hash explode ran twice.
-        val occ = graft.engine.Caches.persisted(
-          arrAll.join(landed, Seq("doc_id"))
-            .select(col("doc_id").as("doc_b"),
-              explode(Dedup.windowHashesPerRow(col("text"), 10)).as("h")))
-        val capped = occ.join(occ.groupBy("h").agg(count(lit(1)).as("wf"))
-          .filter(col("wf") <= 64).select("h"), "h")
-          .select("h", "doc_b")
+        val capped = Dedup.cappedWindowOcc(
+            Dedup.windowOcc(arrAll.join(landed, Seq("doc_id")), 10), 64)
+          .select(col("h"), col("doc_id").as("doc_b"))
         val appended = graft.ops.Bucketing.appendBucketedExactlyOnce(capped,
           s"$db.win_bkt", nBuckets = 8, keys = Seq("h"),
           ledgerDir = ledgerS, batchId = id)
@@ -1817,32 +1721,22 @@ object TextDedup {
       }
       // Decide-at-compaction tail over the accumulated store: one batch
       // containment pass over the stage-3 survivors, then the pack —
-      // identical operators to c12's stages 4-5.
+      // c12's stages 4-5.
       val store = graft.engine.Caches.persisted(s.table(s"$db.stage_bkt")
         .select("doc_id", "text", "exact_kept", "decontam_kept"))
-      val (s3, s4) = graft.engine.PhaseTimer.time("tail") {
+      val (s3, tail) = graft.engine.PhaseTimer.time("tail") {
         val s3x = store.filter(col("exact_kept") && col("decontam_kept"))
           .select("doc_id", "text")
           .localCheckpoint()
-        val s4x = s3x.join(Dedup.containmentDrops(s3x).select("doc_id"),
-            Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        (s3x, s4x)
+        (s3x, containmentPackFunnel(s3x))
       }
-      val pk = graft.ops.Split.packManifest(s4, "text", "doc_id", 512)
-        .agg(countDistinct("bin_id").as("n_windows"),
-          count(lit(1)).as("n_segments"),
-          sum("len").as("n_tokens"),
-          sum(col("bin_id") * col("len") + col("doc_offset") +
-            col("win_offset")).as("pack_checksum"))
       all.filter(col("doc_id") >= LdsEvalSplit)
         .agg(count(lit(1)).as("n_total"))
         .crossJoin(store.agg(count(lit(1)).as("after_gopher")))
         .crossJoin(store.filter(col("exact_kept"))
           .agg(count(lit(1)).as("after_exact")))
         .crossJoin(s3.agg(count(lit(1)).as("after_decontam")))
-        .crossJoin(s4.agg(count(lit(1)).as("after_containment")))
-        .crossJoin(pk)
+        .crossJoin(tail)
     }),
 
     // SKEW-HARDENED dedup — the LSH chain under a deliberately viral span:
@@ -1858,9 +1752,9 @@ object TextDedup {
     "d22_skewed_dedup" -> ((s, dir) => {
       val skewed = docs(s, dir).withColumn("text",
         when(col("doc_id") % 10 < 3, lit(Boilerplate)).otherwise(col("text")))
-      Dedup.candidatePairsSalted(
+      Dedup.candidatePairs(
           Dedup.lshBuckets(Dedup.minhashSignatures(Dedup.shingleHashes(skewed))),
-          salts = 8)
+          Dedup.Hot(salts = 8))
         .groupBy("doc_a")
         .agg(count(lit(1)).as("n_pairs"), sum("doc_b").as("sum_b"),
           max("n_bands").as("max_bands"))
@@ -1875,9 +1769,9 @@ object TextDedup {
     "d23_salted_hot" -> ((s, dir) => {
       val skewed = docs(s, dir).withColumn("text",
         when(col("doc_id") % 10 < 3, lit(Boilerplate)).otherwise(col("text")))
-      val buckets = graft.engine.Caches.persisted(
-        Dedup.lshBuckets(Dedup.minhashSignatures(Dedup.shingleHashes(skewed))))
-      Dedup.candidatePairsSaltedHot(buckets, salts = 8, threshold = 50)
+      Dedup.candidatePairs(
+          Dedup.lshBuckets(Dedup.minhashSignatures(Dedup.shingleHashes(skewed))),
+          Dedup.Hot(salts = 8, threshold = Some(50L)))
         .groupBy("doc_a")
         .agg(count(lit(1)).as("n_pairs"), sum("doc_b").as("sum_b"),
           max("n_bands").as("max_bands"))
@@ -2133,6 +2027,62 @@ object TextDedup {
         .select("source", "k", "sig_k", "n_docs")
     })
   )
+
+  /** c11's containment-SPECTRUM corpus (shared by c13's standing slice):
+    * every doc_id % 10 == 7 doc is replaced by a 20-token excerpt of its
+    * doc_id−5 neighbor plus m of its own tokens, m stepping 3/6/9/12 by
+    * decade, so containment mass sits on every survey rung.
+    */
+  private def containmentSpectrum(base: DataFrame): DataFrame = {
+    val src = base.select((col("doc_id") + 5).as("doc_id"),
+      slice(split(lower(col("text")), "\\s+"), 1, 20).as("_src"))
+    val m = (lit(3) * (lit(1) +
+      pmod(expr("doc_id div 10"), lit(4)))).cast("int")
+    base.join(src, Seq("doc_id"), "left")
+      .withColumn("text",
+        when(col("doc_id") % 10 === 7 && col("_src").isNotNull,
+          array_join(concat(col("_src"),
+            slice(split(lower(col("text")), "\\s+"), lit(1), m)), " "))
+          .otherwise(col("text")))
+      .select("doc_id", "text")
+  }
+
+  /** The ingest decide of c13/e22/e23: one row per arrival, LANDED or
+    * QUARANTINED by [[Dedup.arrivalContainmentDrops]] at `minContE6`, with
+    * its provenance (zeros for a landed arrival). `store` is the capped
+    * standing window store of (h, doc_b) rows the arrivals probe; `all`
+    * holds the text of both sides for the verify tail.
+    */
+  private def arrivalDecisions(arrivals: DataFrame, all: DataFrame,
+      store: DataFrame, minContE6: Long = 800000L): DataFrame = {
+    val drops = Dedup.arrivalContainmentDrops(all,
+      Dedup.arrivalPairs(arrivals, store, 10), minContE6)
+    arrivals.select("doc_id").join(drops, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("keeper_id").isNull.as("landed"),
+        col("keeper_id"),
+        coalesce(col("n_containers"), lit(0L)).as("n_containers"),
+        coalesce(col("max_cont_e6"), lit(0L)).as("max_cont_e6"))
+  }
+
+  /** c12's stages 4-5, shared with e24's decide-at-compaction tail: drop
+    * c10's containment drops from the stage-3 survivors (materialized —
+    * the survivor set feeds its funnel count and the packing, whose
+    * cumsum alone launches several jobs), then sequence-pack them (o27's
+    * manifest). One row: after_containment and the packed stream's
+    * window/segment/token totals plus a boundary checksum.
+    */
+  private def containmentPackFunnel(s3: DataFrame): DataFrame = {
+    val s4 = s3.join(Dedup.containmentDrops(s3).select("doc_id"),
+        Seq("doc_id"), "left_anti")
+      .localCheckpoint()
+    s4.agg(count(lit(1)).as("after_containment"))
+      .crossJoin(graft.ops.Split.packManifest(s4, "text", "doc_id", 512)
+        .agg(countDistinct("bin_id").as("n_windows"),
+          count(lit(1)).as("n_segments"),
+          sum("len").as("n_tokens"),
+          sum(col("bin_id") * col("len") + col("doc_offset") +
+            col("win_offset")).as("pack_checksum")))
+  }
 
   /** One-time signature-store build for the incremental-dedup queries:
     * the standing corpus (doc_id >= minDocId) shingled ONCE, its LSH bucket

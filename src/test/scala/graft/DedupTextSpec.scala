@@ -717,6 +717,29 @@ class DedupTextSpec extends AnyFunSuite {
     assert(loose(2L) == ((2L, 101L, 1L, 600000L, 600000L)))
   }
 
+  test("the 0.8 containment threshold drops 8 of 10 shared shingles and keeps 7 of 9") {
+    // Excerpt 1 is 10 source tokens + 2 novel: 8 of its 10 shingles are
+    // inside source 100 (cont_e6 = 800000, jaccard 8/20). Excerpt 2 is 9
+    // source tokens + 2 novel: 7 of 9 inside source 101 (cont_e6 =
+    // 777778). At the default threshold both drop operators must drop
+    // the first, exactly on the boundary, and keep the second.
+    val a = (1 to 20).map(i => s"alpha$i").mkString(" ")
+    val b = (1 to 20).map(i => s"beta$i").mkString(" ")
+    val onBar = ((1 to 10).map(i => s"alpha$i") ++ Seq("nova", "novb"))
+      .mkString(" ")
+    val belowBar = ((1 to 9).map(i => s"beta$i") ++ Seq("novc", "novd"))
+      .mkString(" ")
+    val docs = Seq((1L, onBar), (2L, belowBar), (100L, a), (101L, b))
+      .toDF("doc_id", "text")
+    val batch = Dedup.containmentDrops(docs, winN = 3)
+      .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
+    assert(batch == Map(1L -> ((1L, 100L, 1L, 800000L))), s"got $batch")
+    val cand = Seq((1L, 100L), (2L, 101L)).toDF("doc_a", "doc_b")
+    val arrival = Dedup.arrivalContainmentDrops(docs, cand)
+      .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
+    assert(arrival == Map(1L -> ((1L, 100L, 1L, 800000L))), s"got $arrival")
+  }
+
   test("c13: the survey-derived rung governs the arrival decide (not the 0.8 fiat)") {
     // The unification seam made observable: a standing corpus whose own
     // containment mass drives the survey to 900000 (the 600000 rung would
@@ -735,7 +758,8 @@ class DedupTextSpec extends AnyFunSuite {
     val standing = (Seq((51L, ex1), (52L, ex2), (100L, a), (101L, b)) ++ fill)
       .toDF("doc_id", "text")
     val rung = Dedup.surveyContainmentRung(
-      Dedup.containmentDropRows(standing, winN = 3),
+      Dedup.dropRows(Dedup.scored(standing, Dedup.windowPairs(
+        Dedup.cappedWindowOcc(Dedup.windowOcc(standing, winN = 3), 64)))),
       nDocs = 10L, ladder = Seq(600000L, 900000L), fracDen = 10L)
     assert(rung == 900000L, s"survey must walk past the over-dropping rung: $rung")
     // Arrival 1: 8 source tokens + 1 novel → 6 of 7 shingles shared
@@ -744,7 +768,7 @@ class DedupTextSpec extends AnyFunSuite {
     val all = standing.unionByName(
       Seq((1L, arr1), (2L, ex1)).toDF("doc_id", "text"))
     val cand = Seq((1L, 100L), (2L, 100L)).toDF("doc_a", "doc_b")
-    val atRung = Dedup.arrivalContainmentDropsE6(all, cand, minContE6 = rung)
+    val atRung = Dedup.arrivalContainmentDrops(all, cand, minContE6 = rung)
       .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
     assert(atRung.keySet == Set(2L),
       s"at the derived rung only the verbatim excerpt drops: ${atRung.keySet}")

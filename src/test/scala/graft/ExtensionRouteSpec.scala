@@ -115,6 +115,29 @@ class ExtensionRouteSpec extends AnyFunSuite {
       Seq((100L, Some(9L)), (200L, Some(20L)), (300L, None)))
   }
 
+  test("graft_asof tolerance, forward and INNER variants on the extension route") {
+    // SqlSurfaceSpec's variants on the same rows. The extension injects
+    // the marker rewrite into the operator-optimization batch, not into
+    // extraOptimizations; each variant must still plan as an as-of join
+    // and return the same rows as on the Session.local route.
+    asOfTables.foreach(ext.sql)
+    def run(join: String, marker: String): Set[(Long, Option[Long])] = {
+      val out = ext.sql(
+        s"""SELECT l.pid, r.c_ts FROM ext_l l $join ext_r r
+           |  ON l.user_id = r.c_user AND $marker""".stripMargin)
+      val phys = out.queryExecution.executedPlan.toString
+      assert(phys.contains("AsOfJoin"), s"$marker: expected an as-of exec in:\n$phys")
+      out.collect().map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long])))
+        .toSet
+    }
+    assert(run("LEFT JOIN", "graft_asof(l.ts, r.c_ts, 3L)") ===
+      Set((100L, Some(9L)), (200L, None), (300L, None)))
+    assert(run("LEFT JOIN", "graft_asof_fwd(l.ts, r.c_ts)") ===
+      Set((100L, Some(20L)), (200L, None), (300L, Some(8L))))
+    assert(run("JOIN", "graft_asof(l.ts, r.c_ts)") ===
+      Set((100L, Some(9L)), (200L, Some(20L))))
+  }
+
   test("install is idempotent on both routes, and both describe functions alike") {
     def strategies(s: SparkSession) =
       s.sessionState.planner.strategies.count(_ == AsOfJoinStrategy)

@@ -148,7 +148,7 @@ class SkewSpec extends AnyFunSuite {
     // max(floor, 8× mean) must route the 200-row bucket through salting
     // (it dwarfs both bounds) while the ≤1-row tail takes the plain path,
     // and the result must still equal the plain join — the unified
-    // default behind Dedup.candidatePairsSalted.
+    // form behind Dedup.candidatePairs' `Hot` without a threshold.
     val buckets = ((1 to 200).map(i => (1, 42L, i.toLong)) ++
       (1 to 50).map(i => (i % 4, 1000L + i, 500L + i)))
       .toDF("band", "band_key", "doc_id").repartition(8)
@@ -177,18 +177,25 @@ class SkewSpec extends AnyFunSuite {
     assert(uauto == uplain)
   }
 
-  test("unified candidatePairsSalted equals candidatePairs on skewed buckets") {
-    val buckets = ((1 to 120).map(i => (0, 7L, i.toLong)) ++
-      (1 to 60).map(i => (i % 3, 500L + i % 20, 1000L + i)))
-      .toDF("band", "band_key", "doc_id")
-    def stats(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_a", "doc_b", "n_bands")
+  test("candidatePairs is row-identical under every skew choice") {
+    // One 120-row viral bucket over a 1-row tail: hot both for the
+    // histogram's own threshold (max(32, 8× mean)) and for d23's explicit
+    // 50. Every choice must return the brute-force pair set with its
+    // shared-band counts.
+    val rows = (1 to 120).map(i => (0, 7L, i.toLong)) ++
+      (1 to 60).map(i => (i % 3, 500L + i % 20, 1000L + i))
+    val expected = rows.groupBy(r => (r._1, r._2)).values
+      .flatMap(g => for (x <- g; y <- g if x._3 < y._3) yield (x._3, y._3))
+      .groupBy(identity).map { case (p, ms) => (p._1, p._2, ms.size.toLong) }
+      .toSet
+    val buckets = rows.toDF("band", "band_key", "doc_id")
+    for (skew <- Seq(graft.ops.Dedup.Plain, graft.ops.Dedup.Hot(salts = 8),
+        graft.ops.Dedup.Hot(salts = 8, threshold = Some(50L)))) {
+      val got = graft.ops.Dedup.candidatePairs(buckets, skew)
+        .select("doc_a", "doc_b", "n_bands")
         .as[(Long, Long, Long)].collect().toSet
-    val plain = stats(graft.ops.Dedup.candidatePairs(buckets))
-    assert(stats(graft.ops.Dedup.candidatePairsSalted(buckets, salts = 8))
-      == plain)
-    assert(stats(graft.ops.Dedup.candidatePairsSaltedAll(buckets, salts = 8))
-      == plain)
+      assert(got == expected, s"skew $skew")
+    }
   }
 
   // The class of bug behind SPARK-23207: a shuffle key derived from a
