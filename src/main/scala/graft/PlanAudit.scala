@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
@@ -8,7 +8,8 @@ import graft.engine.Caches
 
 /** Prints physical-plan facts for the declared queries: scan pushdown,
   * partition pruning, join strategies, exchanges, codegen coverage.
-  * Run: sbt "runMain graft.PlanAudit [query...]"
+  * Run: sbt "runMain graft.PlanAudit [query...]"; SPARK_GRAFT_SF_DIR
+  * picks the scale (default sf0.1, the bench operating point).
   */
 object PlanAudit {
 
@@ -21,18 +22,20 @@ object PlanAudit {
     case p => p.toString
   }
 
-  /** The executed plan of the query `build` returns, then the cached plans
-    * of the intermediates it registered while it was built
+  /** The plan of the query `build` returns (by default its executed plan;
+    * `render` picks another view of it), then the cached plans of the
+    * intermediates it registered while it was built
     * (`Caches.registeredPlans`). The query's plan scans each registered
     * frame as one leaf, so an audit of it alone would miss what runs
-    * inside them. Starts and ends with `Caches.releaseAll`.
+    * inside them. Starts and ends with the release step
+    * (`Harness.release`) on the active session.
     */
-  def auditedPlans(build: => DataFrame): Seq[String] = {
-    Caches.releaseAll()
-    try {
-      val query = build.queryExecution.executedPlan.toString
-      query +: Caches.registeredPlans.map(planText)
-    } finally Caches.releaseAll()
+  def auditedPlans(build: => DataFrame,
+      render: DataFrame => String = _.queryExecution.executedPlan.toString)
+      : Seq[String] = {
+    Harness.release(SparkSession.active)
+    try render(build) +: Caches.registeredPlans.map(planText)
+    finally Harness.release(SparkSession.active)
   }
 
   /** Lines proving the scan pruned partitions at listing time (a non-empty
@@ -61,7 +64,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     SparkEntry.requireKnownQueries(args.toSeq)
     val spark = graft.engine.Session.local("8")
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val dir = Harness.sfDir
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       val plan = auditedPlans(SparkEntry.queries(name)(spark, dir)).mkString("\n")

@@ -18,25 +18,24 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(1))
     val names = args.drop(2)
     SparkEntry.requireKnownQueries(names.toSeq)
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val dir = Harness.sfDir
     val spark = graft.engine.Session.local()
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
       val plan =
         try {
-          val query = fn(spark, dir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          (query +: graft.engine.Caches.registeredPlans.zipWithIndex.map {
-            case (p, i) => s"== Registered intermediate $i ==\n${PlanAudit.planText(p)}"
+          val plans = PlanAudit.auditedPlans(
+            SparkEntry.queries(name)(spark, dir),
+            _.queryExecution.explainString(
+              org.apache.spark.sql.execution.FormattedMode))
+          (plans.head +: plans.tail.zipWithIndex.map { case (p, i) =>
+            s"== Registered intermediate $i ==\n$p"
           }).mkString("\n")
         } catch { case e: Throwable =>
           s"PLAN FAILED: ${e.getClass.getName}: ${e.getMessage}"
         }
       java.nio.file.Files.writeString(
         outDir.resolve(s"${name}_$tag.txt"), plan + "\n")
-      graft.engine.Caches.releaseAll()
-      spark.catalog.clearCache()
       println(s"[plandump] wrote ${name}_$tag.txt")
     }
     spark.stop()

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-curve probe for the heavy dedup chain: times the same queries at
@@ -13,11 +14,12 @@ import org.apache.spark.sql.functions._
   *
   * Run: sbt "runMain graft.ScaleProbe [query...]" (default: the d2→d8→d19
   * chain + c1 + c2 + t13). Prints one line per (query, scale) with
-  * wall-clock seconds; paste the table into PERF.md.
+  * wall-clock seconds and the min pass's jobs, tasks and task time; paste
+  * the table into PERF.md.
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val base = "/root/testdata/sf0.1"
+    val base = Harness.DefaultSfDir
     // --deep: add a THIRD decade point (30x documents replica) for the
     // named queries — the second point on the scale curve that separates
     // a floor-dominated 10x reading (o26 1.0x, d32 1.6x in r16) from the
@@ -35,60 +37,52 @@ object ScaleProbe {
       "--deep/--deep4 need explicit query names")
     SparkEntry.requireKnownQueries(qArgs)
     val spark = graft.engine.Session.local()
+    val harness = new Harness(spark)
 
-    /** mult-x documents replica (replica k suffixes every token with k,
-      * so shingles/signatures stay distinct across replicas — the corpus
-      * grows mult-x with the SAME local duplicate-structure density).
+    /** Write `mult` replicas (`replica(k)`; replica 0 is the original) as
+      * `<dir>/<table>.parquet`, unless it exists. The build is a heavy
+      * write job whose heap/JIT aftermath inflates the first probes by 3-5x
+      * (observed r15: d2 4.50 s contaminated vs 0.94 s clean), so a run
+      * that builds one must not publish its table.
       */
-    def buildDocsReplica(dir: java.io.File, mult: Int): Unit = {
-      val d = spark.read.parquet(s"$base/documents.parquet")
-      (0 until mult).map { k =>
-        if (k == 0) d
-        else d.select(
-          (col("doc_id") + k * 10000000L).as("doc_id"),
-          regexp_replace(col("text"), "(\\S+)", s"$$1$k").as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }.reduce(_ unionByName _)
-        .repartition(32)
-        .write.mode("overwrite")
-        .parquet(new java.io.File(dir, "documents.parquet").toString)
-      println(s"built ${mult}x replica at $dir")
-      // The build is a heavy write job whose heap/JIT aftermath inflates
-      // the first probes by 3-5x (observed r15: d2 4.50 s contaminated vs
-      // 0.94 s clean). Don't publish this run's table.
-      println("WARNING: replica built THIS run — timings are contaminated" +
-        " by the build job; re-run ScaleProbe for the publishable table")
+    def replicate(dir: String, table: String, mult: Int)(
+        replica: Int => DataFrame): Unit = {
+      val out = new java.io.File(dir, s"$table.parquet")
+      if (!out.exists()) {
+        (0 until mult).map(replica).reduce(_ unionByName _)
+          .repartition(32).write.mode("overwrite").parquet(out.toString)
+        println(s"built ${mult}x $table replica at $dir")
+        println("WARNING: replica built THIS run — timings are contaminated" +
+          " by the build job; re-run ScaleProbe for the publishable table")
+      }
     }
+    // Documents: replica k suffixes every token with k, so shingles and
+    // signatures stay distinct across replicas — the corpus grows mult-x
+    // with the SAME local duplicate-structure density.
+    lazy val docs = spark.read.parquet(s"$base/documents.parquet")
+    def docsReplica(k: Int): DataFrame =
+      if (k == 0) docs
+      else docs.select(
+        (col("doc_id") + k * 10000000L).as("doc_id"),
+        regexp_replace(col("text"), "(\\S+)", s"$$1$k").as("text"),
+        col("lang"), col("source"), col("n_chars"))
     val big = graft.queries.Tables.scratch("sf1_documents")
-    val bigDir = new java.io.File(big)
-    if (!new java.io.File(bigDir, "documents.parquet").exists())
-      buildDocsReplica(bigDir, 10)
+    replicate(big, "documents", 10)(docsReplica)
     val big30 = graft.queries.Tables.scratch("sf3_documents")
-    val big30Dir = new java.io.File(big30)
-    if (deep && !new java.io.File(big30Dir, "documents.parquet").exists())
-      buildDocsReplica(big30Dir, 30)
+    if (deep) replicate(big30, "documents", 30)(docsReplica)
     val big100 = graft.queries.Tables.scratch("sf10_documents")
-    val big100Dir = new java.io.File(big100)
-    if (deep4 && !new java.io.File(big100Dir, "documents.parquet").exists())
-      buildDocsReplica(big100Dir, 100)
+    if (deep4) replicate(big100, "documents", 100)(docsReplica)
     // Events replica: 10x LONGER per-key history (each replica shifts
     // ~370 days, so every user's one-month series becomes ~10 months
     // spread over ~10 YEARS) — the long-history regime the chunked
     // ts6/ts7 folds exist for, and the axis a bare row-count replica
     // would miss (more keys is the easy direction; longer keys is the
     // O(d^2) one). event_ids offset per replica to stay unique.
-    if (!new java.io.File(bigDir, "events.parquet").exists()) {
-      val e = graft.queries.Tables.events(spark, base)
-      (0 until 10).map { k =>
-        if (k == 0) e
-        else e.withColumn("event_id", col("event_id") + k * 1000000000L)
-          .withColumn("ts", col("ts") + expr(s"INTERVAL ${k * 370} DAYS"))
-      }.reduce(_ unionByName _)
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"$big/events.parquet")
-      println(s"built 10x-history events replica at $big")
-      println("WARNING: replica built THIS run — timings are contaminated" +
-        " by the build job; re-run ScaleProbe for the publishable table")
+    lazy val events = graft.queries.Tables.events(spark, base)
+    replicate(big, "events", 10) { k =>
+      if (k == 0) events
+      else events.withColumn("event_id", col("event_id") + k * 1000000000L)
+        .withColumn("ts", col("ts") + expr(s"INTERVAL ${k * 370} DAYS"))
     }
     // Embeddings replica: 10x CORPUS VECTORS with the eval/query/standing
     // id bands fixed (replica k offsets vec_id by k*10^7 and shifts every
@@ -97,20 +91,13 @@ object ScaleProbe {
     // standing >= 100) make the bounded sides stay bounded while the
     // corpus side grows — the decontam-audit and store-lifecycle scale
     // shape the 100-TB claim rests on.
-    if (!new java.io.File(bigDir, "embeddings.parquet").exists()) {
-      val v = spark.read.parquet(s"$base/embeddings.parquet")
-      (0 until 10).map { k =>
-        if (k == 0) v
-        else v.select((col("vec_id") + k * 10000000L).as("vec_id"),
-          expr(s"transform(embedding, x -> cast(x + ${k * 0.001} as float))")
-            .as("embedding"),
-          col("label"))
-      }.reduce(_ unionByName _)
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"$big/embeddings.parquet")
-      println(s"built 10x embeddings replica at $big")
-      println("WARNING: replica built THIS run — timings are contaminated" +
-        " by the build job; re-run ScaleProbe for the publishable table")
+    lazy val vecs = spark.read.parquet(s"$base/embeddings.parquet")
+    replicate(big, "embeddings", 10) { k =>
+      if (k == 0) vecs
+      else vecs.select((col("vec_id") + k * 10000000L).as("vec_id"),
+        expr(s"transform(embedding, x -> cast(x + ${k * 0.001} as float))")
+          .as("embedding"),
+        col("label"))
     }
     val names = if (qArgs.nonEmpty) qArgs
       else Seq("d2_minhash_lsh", "d8_dup_clusters", "d19_keep_longest",
@@ -172,33 +159,25 @@ object ScaleProbe {
       (if (deep4) Seq("sf10" -> big100) else Nil)
     for (name <- names; (label, dir) <- scales) {
       val fn = SparkEntry.queries(name)
-      // one warmup (codegen/JIT), then min of two timed passes
-      try {
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        def onePass(): Double = {
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val two = (1 to 2).map(_ => onePass())
-        // STORM GUARD (VERDICT r16 item 5): two passes diverging > 3x
-        // means at least one was eaten by an environment storm (GC wave,
-        // page-cache eviction, a neighbor's write job) — and min-of-two
-        // can't shed a storm that ate BOTH passes. Retry once after a GC
-        // and record the retry in the table row, so a published number
-        // is never a lone contaminated reading (r16's d19/d8 needed a
-        // manual scoped re-probe for exactly this).
-        val stormy = two.max / two.min > 3.0
-        val ts = if (stormy) { System.gc(); two :+ onePass() } else two
-        spark.catalog.clearCache()
-        val note = if (stormy)
-          ts.map(t => f"$t%.2f").mkString("  [storm retry: ", ", ", "]")
+      // One warm-up (codegen/JIT), then Bench's pass rule: min of two timed
+      // passes, with a third after a GC when they disagree by 2×, when the
+      // better one is slower than the warm-up, or past 1.5 s. A third pass
+      // is recorded in the row, so a published number is never a lone
+      // contaminated reading.
+      val warm = harness.pass(fn(spark, dir))
+      val ts =
+        if (warm.ok) harness.passes(warm.seconds)(fn(spark, dir)) else Seq(warm)
+      val good = ts.filter(_.ok)
+      if (good.isEmpty)
+        println(s"$name $label FAILED: ${ts.last.error.get}")
+      else {
+        val best = good.minBy(_.seconds)
+        val note = if (ts.size > 2)
+          ts.map(t => f"${t.seconds}%.2f").mkString("  [third pass: ", ", ", "]")
         else ""
-        println(f"$name%-22s $label%-6s ${ts.min}%8.2f s$note")
-      } catch {
-        case e: Throwable =>
-          println(s"$name $label FAILED: ${e.getMessage}")
+        val c = best.counts
+        println(f"$name%-22s $label%-6s ${best.seconds}%8.2f s" +
+          f"  jobs=${c.jobs} tasks=${c.tasks} task_time=${c.taskTime}%.1f s$note")
       }
     }
     spark.stop()

@@ -25,25 +25,13 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
       }
-      // Drop intra-query persisted intermediates so 75 sequential dumps
-      // don't accumulate cached blocks (same hygiene as Bench). releaseAll
-      // is the caller-owned half of the Caches contract: it also empties
-      // the registry so tracked handles don't accumulate across the sweep.
-      graft.engine.Caches.releaseAll()
-      spark.catalog.clearCache()
+      // Same release step as Bench: the sequential dumps must not
+      // accumulate cached blocks or registered intermediates.
+      Harness.release(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
+    // A tab or CR in builder-authored SQL, left raw, would make the
     // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def q(s: String): String = Harness.jsonString(s)
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

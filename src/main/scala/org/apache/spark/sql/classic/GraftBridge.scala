@@ -73,6 +73,14 @@ object GraftBridge {
       case _ => None
     }
 
+  /** Block until every event posted so far reached every listener
+    * (`LiveListenerBus.waitUntilEmpty`, `private[spark]`); false on timeout.
+    */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession,
+      timeoutMs: Long = 60000L): Boolean =
+    try { spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs); true }
+    catch { case _: java.util.concurrent.TimeoutException => false }
+
   /** Filesystem location of a catalog table — for maintenance rewrites
     * that must re-read a bucketed table's files as a PLAIN parquet scan
     * (a scan whose partitioning is unknown, so an explicit repartition

@@ -14,7 +14,8 @@ globally): Bench emits "noise_floor" — the median per-query pass spread
 of the sweep itself. With --prev, per-query deltas are flagged as
 regressions ONLY when they clear max(40%, 2x the floor) relative AND
 0.3 s absolute; a flag counts as real only if it repeats in two
-consecutive rounds.
+consecutive rounds. When both sweeps carry Bench's `task_time` map, each
+query's task-time ratio vs --prev prints next to its wall ratio.
 """
 import json, os, statistics, sys, time
 
@@ -114,6 +115,19 @@ def main(sf_dir, oracle_path, bench_path, md_path=None, prev_path=None):
           f"{par['procs']}-way wall {par['wall_s']} s)")
     spark_times = bench.get("queries", {})
     noise_floor = bench.get("noise_floor")
+    prev_bench = json.load(open(prev_path)) if prev_path else {}
+    # Per-query task time (summed task durations) moves far less with host
+    # load than wall time; when both sweeps carry it, its ratio vs --prev
+    # prints next to the wall ratio.
+    task_now = bench.get("task_time")
+    task_prev = prev_bench.get("task_time")
+
+    def task_ratio(name):
+        if not (task_now and task_prev):
+            return None
+        cur, old = task_now.get(name), task_prev.get(name)
+        return cur / old if cur is not None and old else None
+
     rows = []
     for name, sql in sorted(oracle.items()):
         times = []
@@ -137,7 +151,13 @@ def main(sf_dir, oracle_path, bench_path, md_path=None, prev_path=None):
         d = f"{duck:.3f}" if duck is not None else "n/a"
         s = f"{spark:.3f}" if spark is not None else "n/a"
         r = f"{ratio:.2f}x" if ratio is not None else "-"
-        print(f"{name:28s} spark {s:>8s}  duckdb {d:>8s}  ratio {r}")
+        vs_prev = ""
+        if task_now and task_prev:
+            old, tr = prev_bench.get("queries", {}).get(name), task_ratio(name)
+            w = f"{spark / old:.2f}x" if spark is not None and old else "-"
+            t = f"{tr:.2f}x" if tr is not None else "-"
+            vs_prev = f"  vs prev wall {w} task {t}"
+        print(f"{name:28s} spark {s:>8s}  duckdb {d:>8s}  ratio {r}{vs_prev}")
     ok = [r for r in rows if r[3] is not None]
     tot_s = sum(r[1] for r in ok)
     tot_d = sum(r[2] for r in ok) or 1e-9  # degenerate oracle subsets
@@ -149,7 +169,7 @@ def main(sf_dir, oracle_path, bench_path, md_path=None, prev_path=None):
     # weather. normalized = raw_ratio * (cal_now / cal_prev).
     norm_note = None
     if prev_path:
-        prev_cal = json.load(open(prev_path)).get("duckdb_calibration")
+        prev_cal = prev_bench.get("duckdb_calibration")
         if prev_cal and prev_cal.get("total"):
             factor = cal["total"] / prev_cal["total"]
             norm = (tot_s / tot_d) * factor
@@ -167,7 +187,7 @@ def main(sf_dir, oracle_path, bench_path, md_path=None, prev_path=None):
               f"{noise_floor * 100:.1f}%")
     regressions = []
     if prev_path:
-        prev = json.load(open(prev_path)).get("queries", {})
+        prev = prev_bench.get("queries", {})
         thr = max(0.40, 2 * (noise_floor or 0.0))
         for name, cur in sorted(spark_times.items()):
             old = prev.get(name)
@@ -178,8 +198,10 @@ def main(sf_dir, oracle_path, bench_path, md_path=None, prev_path=None):
                   f"> 0.3 s abs vs {prev_path}; real only if repeated "
                   "two consecutive rounds):")
             for name, old, cur in regressions:
+                tr = task_ratio(name)
+                task = f", task {tr:.2f}x" if tr is not None else ""
                 print(f"  {name:28s} {old:.3f} -> {cur:.3f} s "
-                      f"({cur / old:.2f}x)")
+                      f"({cur / old:.2f}x{task})")
         else:
             print(f"no per-query regression clears max(40%, 2x floor) "
                   f"vs {prev_path}")
