@@ -11,16 +11,17 @@ import graft.engine.{Caches, PhaseTimer}
 
 /** The measurement loop the harness mains share: one timed noop-sink pass
   * per query, counted by one listener, and one release step between
-  * queries. The main that builds a `Harness` attaches the listener;
-  * `Session.local` does not, so the tests and `perfbench/` count nothing.
+  * queries. Building a `Harness` attaches the listener and `close` removes
+  * it; `Session.local` attaches none, so `perfbench/` and the tests that
+  * build no `Harness` count nothing.
   */
-final class Harness(spark: SparkSession) {
+final class Harness(spark: SparkSession) extends AutoCloseable {
   import Harness._
 
   private val jobs, stages, tasks = new AtomicInteger(0)
   private val taskMs = new AtomicLong(0L)
 
-  spark.sparkContext.addSparkListener(new SparkListener {
+  private val listener = new SparkListener {
     override def onJobStart(j: SparkListenerJobStart): Unit =
       jobs.incrementAndGet()
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
@@ -29,7 +30,11 @@ final class Harness(spark: SparkSession) {
       tasks.incrementAndGet()
       if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
     }
-  })
+  }
+  spark.sparkContext.addSparkListener(listener)
+
+  /** Detach the counting listener from the session's bus. */
+  override def close(): Unit = spark.sparkContext.removeSparkListener(listener)
 
   /** The counts since the last call, read once the listener bus has
     * delivered every event posted before it.
@@ -110,7 +115,9 @@ object Harness {
   }
 
   /** `s` as a JSON string literal, every control character escaped: an
-    * exception message can carry raw bytes (multimodal decode errors do).
+    * exception message can carry raw bytes (multimodal decode errors do),
+    * and a tab or CR left raw in oracle SQL would make the driver's
+    * `json.load` of `oracle_sql.json` fail.
     */
   def jsonString(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""

@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import graft.Harness.jsonString
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -29,15 +32,14 @@ object Verify {
       // accumulate cached blocks or registered intermediates.
       Harness.release(spark)
     }
-    // A tab or CR in builder-authored SQL, left raw, would make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = Harness.jsonString(s)
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
-      failures.map { case (k, v) => s"${q(k)}: ${q(v.take(300))}" }
+      failures
+        .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v.take(300))}" }
         .mkString("{", ",", "}"))
     spark.stop()
   }

@@ -74,11 +74,11 @@ object GraftBridge {
     }
 
   /** Block until every event posted so far reached every listener
-    * (`LiveListenerBus.waitUntilEmpty`, `private[spark]`); false on timeout.
+    * (`LiveListenerBus.waitUntilEmpty`, `private[spark]`); false when the
+    * bus has not drained in 60 s.
     */
-  def drainListenerBus(spark: org.apache.spark.sql.SparkSession,
-      timeoutMs: Long = 60000L): Boolean =
-    try { spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs); true }
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Boolean =
+    try { spark.sparkContext.listenerBus.waitUntilEmpty(60000L); true }
     catch { case _: java.util.concurrent.TimeoutException => false }
 
   /** Filesystem location of a catalog table — for maintenance rewrites

@@ -3,6 +3,7 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{Caches, PhaseTimer}
@@ -12,9 +13,13 @@ import graft.engine.{Caches, PhaseTimer}
   * released, each pass counts only its own jobs and tasks, and the one JSON
   * string escaper yields text a JSON parser reads back unchanged.
   */
-class HarnessSpec extends AnyFunSuite {
+class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
   private lazy val harness = new Harness(spark)
+
+  // The session is shared by every suite: leave no counting listener on it.
+  override def afterAll(): Unit =
+    try harness.close() finally super.afterAll()
 
   /** One job of three tasks: a three-partition range, no exchange. */
   private def oneJob: DataFrame = spark.range(0, 100, 1, 3).toDF("id")
@@ -75,6 +80,13 @@ class HarnessSpec extends AnyFunSuite {
       assert(c == a.copy(taskTime = c.taskTime))
       assert(Seq(a, b, c).forall(_.taskTime >= 0.0))
     } finally spark.sparkContext.removeSparkListener(slow)
+  }
+
+  test("a closed harness leaves its listener off the session's bus") {
+    val h = new Harness(spark)
+    h.pass(oneJob)
+    h.close()
+    assert(h.pass(oneJob).counts == Harness.Counts(0, 0, 0, 0.0))
   }
 
   test("a pass rule takes a third pass only for a slow or unsteady query") {
