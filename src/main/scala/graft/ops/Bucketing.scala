@@ -158,23 +158,42 @@ object Bucketing {
   def pruneLedger(ledgerDir: java.io.File, upToBatchId: Long): Unit =
     pruneLedger(ledgerDir.toURI.toString, upToBatchId)
 
-  /** [[appendBucketed]] guarded by a committed-batchId ledger — the
-    * idempotent-sink contract a `foreachBatch` append needs: Structured
-    * Streaming redelivers the in-flight micro-batch (same batchId, same
-    * rows) after any restart, and an unguarded append would double every
-    * row of the replayed batch into the store. Check-append-commit: a
-    * batchId with a ledger marker is a no-op (returns false); otherwise
-    * append then atomically publish the marker.
+  /** The one check → act → commit step of every exactly-once store write
+    * — the idempotent-sink contract a `foreachBatch` sink needs:
+    * Structured Streaming redelivers the in-flight micro-batch (same
+    * batchId, same rows) after any restart, and an unguarded append would
+    * double every row of the replayed batch into the store. A batchId with
+    * a ledger marker returns false WITHOUT evaluating `body` (a replay
+    * pays no discarded work); otherwise `body` runs, then the marker
+    * publishes atomically ([[commit]]) and the call returns true.
     *
-    * Honest boundary: if the process dies BETWEEN the append and the
-    * marker publish, the replay re-appends (at-least-once for that one
+    * Honest boundary: if the process dies BETWEEN the body and the marker
+    * publish, the replay re-runs the body (at-least-once for that one
     * window). Closing it on raw parquet requires an atomic multi-file
     * publish, i.e. a transactional table format (Delta/Iceberg/Hive ACID)
     * whose commit protocol subsumes this ledger; at 100 TB that is the
     * deployment answer, and this ledger is exactly the batchId-dedup the
     * format's `txnAppId`/snapshot commit implements internally.
     */
-  def appendBucketedExactlyOnce(df: DataFrame, table: String, nBuckets: Int,
+  def exactlyOnce(ledgerUri: String, batchId: Long, note: String)
+      (body: => Unit): Boolean =
+    if (isCommitted(ledgerUri, batchId)) false
+    else {
+      body
+      commit(ledgerUri, batchId, note)
+      true
+    }
+
+  /** [[exactlyOnce]] for a local ledger directory. */
+  def exactlyOnce(ledgerDir: java.io.File, batchId: Long, note: String)
+      (body: => Unit): Boolean =
+    exactlyOnce(ledgerDir.toURI.toString, batchId, note)(body)
+
+  /** [[appendBucketed]] through [[exactlyOnce]]: a committed batchId is a
+    * no-op (returns false, `df` not even built); otherwise append, then
+    * publish the marker.
+    */
+  def appendBucketedExactlyOnce(df: => DataFrame, table: String, nBuckets: Int,
       keys: Seq[String], ledgerDir: java.io.File, batchId: Long): Boolean =
     appendBucketedExactlyOnce(df, table, nBuckets, keys,
       ledgerDir.toURI.toString, batchId)
@@ -183,14 +202,84 @@ object Bucketing {
     * cluster form: point it at a shared-filesystem directory and the
     * check-append-commit survives a driver restart on another node.
     */
-  def appendBucketedExactlyOnce(df: DataFrame, table: String, nBuckets: Int,
+  def appendBucketedExactlyOnce(df: => DataFrame, table: String, nBuckets: Int,
       keys: Seq[String], ledgerUri: String, batchId: Long): Boolean =
-    if (isCommitted(ledgerUri, batchId)) false
-    else {
-      appendBucketed(df, table, nBuckets, keys)
-      commit(ledgerUri, batchId, s"table=$table buckets=$nBuckets")
-      true
+    exactlyOnce(ledgerUri, batchId, s"table=$table buckets=$nBuckets")(
+      appendBucketed(df, table, nBuckets, keys))
+
+  /** A standing store: one catalog database pinned at `location`, its
+    * bucketed tables, and its named exactly-once ledgers, each kept in the
+    * store's own directory (`_<name>_ledger`). Every stateful query opens,
+    * writes, appends to and reads its store through this one handle.
+    */
+  final class Store private (val spark: SparkSession, val db: String,
+      val location: String) {
+
+    /** Catalog name of table `tbl`. */
+    def name(tbl: String): String = s"$db.$tbl"
+
+    /** On-disk directory of table `tbl`. */
+    def dir(tbl: String): java.io.File = new java.io.File(location, tbl)
+
+    /** Directory of the ledger called `name`. */
+    def ledger(name: String = "append"): java.io.File =
+      Store.ledgerDir(location, name)
+
+    /** Drop `tbl` and its directory ([[reset]]) and return its catalog
+      * name, ready for a fresh write. */
+    def fresh(tbl: String): String = {
+      reset(spark, name(tbl), dir(tbl))
+      name(tbl)
     }
+
+    /** Write `df` as a fresh bucketed table `tbl`. */
+    def write(df: DataFrame, tbl: String, nBuckets: Int,
+        keys: Seq[String]): Unit =
+      writeBucketed(df, fresh(tbl), nBuckets, keys)
+
+    /** Append `df` to `tbl` once per `batchId` under ledger `ledger`
+      * ([[appendBucketedExactlyOnce]]: `df` is not even built for a
+      * committed id), then refresh the table. The refresh matters when the
+      * append ran in a `foreachBatch` callback's CLONED session: the writer
+      * invalidated ITS file-listing cache, not this session's, and without
+      * it a read here silently misses every appended row.
+      */
+    def append(tbl: String, nBuckets: Int, keys: Seq[String], batchId: Long,
+        ledger: String = "append")(df: => DataFrame): Boolean = {
+      val appended = appendBucketedExactlyOnce(df, name(tbl), nBuckets, keys,
+        this.ledger(ledger), batchId)
+      spark.catalog.refreshTable(name(tbl))
+      appended
+    }
+
+    /** Table `tbl` after a refresh: every committed append is visible. */
+    def read(tbl: String): DataFrame = {
+      spark.catalog.refreshTable(name(tbl))
+      spark.table(name(tbl))
+    }
+  }
+
+  object Store {
+
+    /** Open the store `db` at `location`: create the database pinned there
+      * (a FRESH session's in-memory catalog does not know tables a
+      * previous session left in the warehouse) and clear every ledger in
+      * the store's directory. Callers rebuild the store's tables on each
+      * run (Bench and Verify run a query more than once), and a rebuilt
+      * store must not suppress re-applied batches as "already committed".
+      */
+    def open(spark: SparkSession, db: String, location: String): Store = {
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$location'")
+      Option(new java.io.File(location).listFiles()).toSeq.flatten
+        .filter(f => f.getName.startsWith("_") && f.getName.endsWith("_ledger"))
+        .foreach(clearDir)
+      new Store(spark, db, location)
+    }
+
+    /** Where the ledger called `name` of the store at `location` lives. */
+    def ledgerDir(location: String, name: String): java.io.File =
+      new java.io.File(location, s"_${name}_ledger")
+  }
 
   /** Compact an appended bucketed table back to one file per bucket,
     * restoring the Sort-free scan that [[appendBucketed]] defers. Reads the

@@ -320,8 +320,7 @@ object Dedup {
     */
   def simhashClusters(docs: DataFrame, maxHamming: Int): DataFrame =
     if (maxHamming == 0) {
-      val sh = simhash(docs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sh = simhash(docs).persistTracked()
       val groups = sh.groupBy("simhash")
         .agg(min("doc_id").as("keep_id"), count(lit(1)).as("_n"))
         .filter(col("_n") >= 2)
@@ -422,10 +421,10 @@ object Dedup {
     val MD = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // All vertices (kept aside: star rounds drop vertices whose component
     // collapses around them — roots re-enter the output via this frame).
+    // Not persisted: its one reader is the final left-anti union.
     val verts = pairs.select(col("doc_a").as("u"))
       .union(pairs.select(col("doc_b").as("u")))
       .distinct()
-      .persist(MD)
     // Canonical directed edge state: u > v, distinct, self-loops dropped.
     // localCheckpoint (eager) truncates lineage so round N's plan does not
     // embed rounds 1..N-1; it also serves as the per-round cache.

@@ -88,7 +88,7 @@ object Retrieval {
     val occ = corpus.select(col(idCol).as("doc_id"),
         posexplode(graft.ops.TextOps.tokens(col(textCol)))
           .as(Seq("pos", "term")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persistTracked()
     val qterms = phrases.select(col("query_id"),
       posexplode(col("terms")).as(Seq("j", "term")))
     // A (query, doc, p) row survives step j iff term j occurs at p + j —
@@ -288,36 +288,28 @@ object Retrieval {
     */
   def buildPostingStore(spark: SparkSession, docs: DataFrame, idCol: String,
       textCol: String, db: String, dbLoc: String, nBuckets: Int): Unit = {
-    // Pinned DB location + per-table reset: a FRESH session's in-memory
-    // catalog does not know tables a previous session left in the
-    // warehouse, and saveAsTable then fails on the stale LOCATION — the
-    // buildSigStore discipline (drop-if-exists + rm the directory).
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$dbLoc'")
+    // Opening the store clears its append ledger: a fresh build
+    // invalidates all append history.
+    val store = Bucketing.Store.open(spark, db, dbLoc)
     val post = postings(docs, idCol, textCol).persistTracked()
     val dl = docLengths(docs, idCol, textCol).persistTracked()
-    for (tbl <- Seq("postings", "term_stats", "doc_stats", "corpus_stats"))
-      Bucketing.reset(spark, s"$db.$tbl", new java.io.File(dbLoc, tbl))
-    // A fresh build invalidates all append history: clear the batch
-    // ledger [[appendPostingStore]] publishes into, or a rebuilt store
-    // would suppress re-applied deltas as "already committed".
-    Bucketing.clearDir(appendLedger(dbLoc))
+    val Seq(postT, termT, docT, corpusT) =
+      Seq("postings", "term_stats", "doc_stats", "corpus_stats").map(store.fresh)
     // Four disjoint tables — write them as concurrent jobs (§2.6); norms
     // bucket by doc_id, the scoring-side join key, so a probe's dl join
     // is exchange-free on the store side.
     concurrently(
-      () => Bucketing.writeBucketed(post, s"$db.postings", nBuckets,
-        Seq("term")),
-      () => Bucketing.writeBucketed(documentFrequencies(post),
-        s"$db.term_stats", nBuckets, Seq("term")),
-      () => Bucketing.writeBucketed(dl, s"$db.doc_stats", nBuckets,
-        Seq("doc_id")),
+      () => Bucketing.writeBucketed(post, postT, nBuckets, Seq("term")),
+      () => Bucketing.writeBucketed(documentFrequencies(post), termT,
+        nBuckets, Seq("term")),
+      () => Bucketing.writeBucketed(dl, docT, nBuckets, Seq("doc_id")),
       () => corpusStats(dl).write.mode("overwrite").format("parquet")
-        .saveAsTable(s"$db.corpus_stats"))
+        .saveAsTable(corpusT))
   }
 
   /** The append ledger's location inside a store's db directory. */
   def appendLedger(dbLoc: String): java.io.File =
-    new java.io.File(dbLoc, "_append_ledger")
+    Bucketing.Store.ledgerDir(dbLoc, "append")
 
   /** Run independent store-table writes as CONCURRENT jobs (guide §2.6:
     * actions are only sequential because the driver calls them
@@ -370,26 +362,24 @@ object Retrieval {
     // retry of an already-committed batch is suppressed entirely —
     // re-appending would silently double every delta posting AND the
     // appended stats partials. The marker publishes only after all four
-    // appends land.
-    if (Bucketing.isCommitted(ledgerDir, batchId)) return
-    // The delta's postings/norms each feed TWO appends (rows + their
-    // stats partial) — persist, or each consumer re-tokenizes the delta.
-    val post = postings(delta, idCol, textCol).persistTracked()
-    val dl = docLengths(delta, idCol, textCol).persistTracked()
-    // Four disjoint-table appends as concurrent jobs (§2.6) — the marker
-    // publishes only after ALL land (same at-least-once crash boundary
-    // as the sequential form: a death before the marker replays the
-    // batch; the ledger suppresses a replay after it).
-    concurrently(
-      () => Bucketing.appendBucketed(post, s"$db.postings", nBuckets,
-        Seq("term")),
-      () => Bucketing.appendBucketed(dl, s"$db.doc_stats", nBuckets,
-        Seq("doc_id")),
-      () => Bucketing.appendBucketed(documentFrequencies(post),
-        s"$db.term_stats", nBuckets, Seq("term")),
-      () => corpusStats(dl).write.mode("append").format("parquet")
-        .saveAsTable(s"$db.corpus_stats"))
-    Bucketing.commit(ledgerDir, batchId, s"posting-store append into $db")
+    // appends land (a death before it replays the batch).
+    Bucketing.exactlyOnce(ledgerDir, batchId, s"posting-store append into $db") {
+      // The delta's postings/norms each feed TWO appends (rows + their
+      // stats partial) — persist, or each consumer re-tokenizes the delta.
+      val post = postings(delta, idCol, textCol).persistTracked()
+      val dl = docLengths(delta, idCol, textCol).persistTracked()
+      // Four disjoint-table appends as concurrent jobs (§2.6).
+      concurrently(
+        () => Bucketing.appendBucketed(post, s"$db.postings", nBuckets,
+          Seq("term")),
+        () => Bucketing.appendBucketed(dl, s"$db.doc_stats", nBuckets,
+          Seq("doc_id")),
+        () => Bucketing.appendBucketed(documentFrequencies(post),
+          s"$db.term_stats", nBuckets, Seq("term")),
+        () => corpusStats(dl).write.mode("append").format("parquet")
+          .saveAsTable(s"$db.corpus_stats"))
+    }
+    ()
   }
 
   /** The canonical per-term df view over a store's (possibly partial)

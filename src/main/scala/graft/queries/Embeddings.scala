@@ -240,39 +240,24 @@ object Embeddings {
     // ledger; the gate REPLAYS the final micro-batch (must be a no-op) and
     // the per-cell rollup must hash-equal a full-corpus assignment rebuild.
     "e13_stream_ann_ingest" -> ((s, dir) => {
-      val db = "graft_annstore_e13_" + Tables.dirTag(dir)
-      val dbLoc = Tables.scratch(db + "_db")
-      s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$dbLoc'")
-      graft.ops.Bucketing.reset(s, s"$db.cells",
-        new java.io.File(dbLoc, "cells"))
+      val store = Tables.store(s, "graft_annstore_e13_", dir)
       val all = t(s, dir, "embeddings")
       val standing = all.filter(col("vec_id") >= StandingMin)
       val model = Similarity.kmeansFit(standing, KmeansK, KmeansIters)
-      graft.ops.Bucketing.writeBucketed(
-        Similarity.assignWithModel(standing, model),
-        s"$db.cells", nBuckets = 4, keys = Seq("cell"))
-      val ledger = new java.io.File(Tables.scratch(db + "_ledger"))
-      Option(ledger.listFiles()).foreach(_.foreach(_.delete()))
+      store.write(Similarity.assignWithModel(standing, model), "cells",
+        nBuckets = 4, keys = Seq("cell"))
       val delta = Tables.streamT(s, dir, "embeddings",
           "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
         .filter(col("vec_id") < StandingMin)
-      val seenBatches = scala.collection.mutable.ArrayBuffer.empty[Long]
       def append(batch: DataFrame, id: Long): Boolean =
-        graft.ops.Bucketing.appendBucketedExactlyOnce(
-          Similarity.assignWithModel(batch, model), s"$db.cells",
-          nBuckets = 4, keys = Seq("cell"), ledgerDir = ledger, batchId = id)
-      graft.streaming.StreamingWindows.runForeachBatch(delta, "e13") {
-        (batch, id) => seenBatches += id; append(batch, id); ()
+        store.append("cells", nBuckets = 4, keys = Seq("cell"), id)(
+          Similarity.assignWithModel(batch, model))
+      val last = graft.streaming.StreamingWindows.runPhase(delta, "e13") {
+        (batch, id) => append(batch, id); ()
       }
-      // nonEmpty guard: a glob matching no files yields zero micro-batches;
-      // fail with the data-layout cause, not .last's NoSuchElementException.
-      require(seenBatches.nonEmpty, "stream produced no micro-batches " +
-        "(stream source matched no files?)")
-      val replayed = append(
-        all.filter(col("vec_id") < StandingMin), seenBatches.last)
+      val replayed = append(all.filter(col("vec_id") < StandingMin), last)
       require(!replayed, "ledger failed to suppress a replayed micro-batch")
-      s.catalog.refreshTable(s"$db.cells")
-      s.table(s"$db.cells")
+      store.read("cells")
         .groupBy("cell")
         .agg(count(lit(1)).as("n_vecs"), sum("vec_id").as("sum_ids"),
           max("d2").as("max_d2"))

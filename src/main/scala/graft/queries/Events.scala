@@ -47,8 +47,7 @@ object Events {
       graft.streaming.StreamingWindows.withStatePartitions(s, 4) {
         val agg = graft.streaming.StreamingWindows.tumbling(
           rawEventStream(s, dir), "15 minutes", "1 hour")
-        graft.streaming.StreamingWindows.runToMemory(
-          agg, "e5_mem_" + java.util.UUID.randomUUID().toString.replace("-", ""))
+        graft.streaming.StreamingWindows.runToMemory(agg, "e5_mem")
       }),
 
     // Custom whole-operator extension (AsOfJoin LogicalPlan + Strategy +
@@ -166,9 +165,8 @@ object Events {
       graft.streaming.StreamingWindows.withStatePartitions(s, 4) {
         val sess = graft.streaming.StatefulSessions.sessions(
           rawEventStream(s, dir), gapMinutes = 30)
-        val emitted = graft.streaming.StreamingWindows.runToMemory(
-          sess, "e6_mem_" + java.util.UUID.randomUUID().toString.replace("-", ""),
-          org.apache.spark.sql.streaming.OutputMode.Append())
+        val emitted = graft.streaming.StreamingWindows.runToMemory(sess,
+          "e6_mem", org.apache.spark.sql.streaming.OutputMode.Append())
         // Held-back-tail witness: sessions still open at the final
         // watermark are deliberately NOT emitted (append-mode contract);
         // n_open_at_end = batch-total − emitted pins that delta as an
@@ -196,8 +194,7 @@ object Events {
       graft.streaming.StreamingWindows.withStatePartitions(s, 4) {
         val deduped = graft.streaming.StreamingDedup.distinctKeysBounded(
           rawEventStream(s, dir), "ts", "90 days", Seq("user_id", "event_type"))
-        graft.streaming.StreamingWindows.runToMemory(
-          deduped, "e7_mem_" + java.util.UUID.randomUUID().toString.replace("-", ""),
+        graft.streaming.StreamingWindows.runToMemory(deduped, "e7_mem",
           org.apache.spark.sql.streaming.OutputMode.Append())
       }),
 
@@ -230,8 +227,7 @@ object Events {
                  |AND p_ts <= c_ts + interval 10 minutes""".stripMargin))
           .select(col("user_id"),
             (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"))
-        graft.streaming.StreamingWindows.runToMemory(
-          pairs, "e8_mem_" + java.util.UUID.randomUUID().toString.replace("-", ""),
+        graft.streaming.StreamingWindows.runToMemory(pairs, "e8_mem",
           org.apache.spark.sql.streaming.OutputMode.Append())
       }
       sunk.groupBy("user_id")
@@ -371,34 +367,31 @@ object Events {
         + (b.getDate(1).getTime - b.getDate(0).getTime) / 2)
       var state: DataFrame = null
       var rows: DataFrame = null
-      def phase(name: String, part: DataFrame): Unit =
-        graft.streaming.StreamingWindows.runForeachBatch(part, name) {
-          (batch, _) =>
-            val daily = TimeSeries.dailyE6(batch, "user_id", "ts", "value")
-            val st =
-              if (state != null) state
-              else daily.select(col("user_id"),
-                lit(null).cast("long").as("_s_off")).limit(0)
-            val r = TimeSeries.ewmaDailySeeded(daily, st, "user_id")
-              .localCheckpoint()
-            // New standing state: each key's max-date row, still in
-            // offset space; keys untouched this phase keep their state.
-            val latest = r.groupBy("user_id")
-              .agg(max(struct(col("d"), col("_ewma_off"))).as("m"))
-              .select(col("user_id"), col("m._ewma_off").as("_s_off"))
-            state =
-              (if (state == null) latest
-               else latest.unionByName(
-                 state.join(latest, Seq("user_id"), "left_anti")))
-                .localCheckpoint()
-            rows = if (rows == null) r else rows.unionByName(r)
-            ()
-        }
+      def fold(batch: DataFrame, id: Long): Unit = {
+        val daily = TimeSeries.dailyE6(batch, "user_id", "ts", "value")
+        val st =
+          if (state != null) state
+          else daily.select(col("user_id"),
+            lit(null).cast("long").as("_s_off")).limit(0)
+        val r = TimeSeries.ewmaDailySeeded(daily, st, "user_id")
+          .localCheckpoint()
+        // New standing state: each key's max-date row, still in
+        // offset space; keys untouched this phase keep their state.
+        val latest = r.groupBy("user_id")
+          .agg(max(struct(col("d"), col("_ewma_off"))).as("m"))
+          .select(col("user_id"), col("m._ewma_off").as("_s_off"))
+        state =
+          (if (state == null) latest
+           else latest.unionByName(
+             state.join(latest, Seq("user_id"), "left_anti")))
+            .localCheckpoint()
+        rows = if (rows == null) r else rows.unionByName(r)
+      }
       val stream = rawEventStream(s, dir)
-      phase("e15a", stream.filter(to_date(col("ts")) <= lit(mid)))
-      phase("e15b", stream.filter(to_date(col("ts")) > lit(mid)))
-      require(rows != null, "stream produced no micro-batches " +
-        "(stream source matched no files?)")
+      graft.streaming.StreamingWindows.runPhase(
+        stream.filter(to_date(col("ts")) <= lit(mid)), "e15a", 0)(fold)
+      graft.streaming.StreamingWindows.runPhase(
+        stream.filter(to_date(col("ts")) > lit(mid)), "e15b", 1)(fold)
       rows.select("user_id", "d", "v_e6", "ewma_e6")
     }),
 
@@ -450,8 +443,7 @@ object Events {
           col("n"), col("sum_v_e3"))
       graft.streaming.StreamingWindows.withStatePartitions(s, 4) {
         val emitted = graft.streaming.StreamingWindows.runToMemory(agg,
-          "e16_mem_" + java.util.UUID.randomUUID().toString.replace("-", ""),
-          org.apache.spark.sql.streaming.OutputMode.Append())
+          "e16_mem", org.apache.spark.sql.streaming.OutputMode.Append())
         val total = ev
           .groupBy(window(col("ts"), "15 minutes"), col("event_type"))
           .agg(count(lit(1)).as("_n"))

@@ -159,8 +159,7 @@ object Landsat {
         size(col("tensor")).as("n_stations"),
         arrSum(flat).cast("long").as("t_sum"),
         arrDot(flat).cast("long").as("t_dot"))
-      graft.streaming.StreamingWindows.runToMemory(
-        proj, "s5d_mem_" + java.util.UUID.randomUUID().toString.replace("-", ""),
+      graft.streaming.StreamingWindows.runToMemory(proj, "s5d_mem",
         org.apache.spark.sql.streaming.OutputMode.Append())
     }),
 
@@ -223,7 +222,7 @@ object Landsat {
     "s11_jsonl_roundtrip" -> ((s, dir) => {
       val out = Tables.scratch("s11_jsonl")
       t(s, dir, "documents").write.mode("overwrite").json(out)
-      s.read.schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
+      s.read.schema(Tables.DocumentsSchema)
         .json(out)
         .select("doc_id", "text", "lang", "source", "n_chars")
     }),

@@ -59,11 +59,11 @@ object Lexical {
     // 100 TB the per-query-batch cost tracks the batch's vocabulary, not
     // the corpus.
     "b2_bm25_store" -> ((s, dir) => {
-      val db = "graft_bm25_" + Tables.dirTag(dir)
+      val (db, dbLoc) = Tables.storeAt("graft_bm25_", dir)
       val d = docs(s, dir)
       graft.engine.PhaseTimer.time("build") {
-        Retrieval.buildPostingStore(s, d, "doc_id", "text", db,
-          Tables.scratch(db + "_db"), nBuckets = 8)
+        Retrieval.buildPostingStore(s, d, "doc_id", "text", db, dbLoc,
+          nBuckets = 8)
       }
       val q = Retrieval.queriesFromDocs(d, "doc_id", "text",
         col("doc_id") >= 8 && col("doc_id") < 13)
@@ -106,8 +106,7 @@ object Lexical {
     // hash-equal the full-corpus oracle — b2's exact SQL — so a lost,
     // doubled, or mis-bucketed posting (or a stale df) flips the hash.
     "b5_store_append" -> ((s, dir) => {
-      val db = "graft_bm25_b5_" + Tables.dirTag(dir)
-      val dbLoc = Tables.scratch(db + "_db")
+      val (db, dbLoc) = Tables.storeAt("graft_bm25_b5_", dir)
       val d = docs(s, dir)
       graft.engine.PhaseTimer.time("build") {
         Retrieval.buildPostingStore(s, d.filter(col("doc_id") >= 50),
@@ -243,8 +242,7 @@ object Lexical {
     // search must STILL hash-equal b2's full-corpus oracle — a row lost,
     // doubled, or mis-bucketed by the rewrite flips the hash.
     "b7_store_compaction" -> ((s, dir) => {
-      val db = "graft_bm25_b7_" + Tables.dirTag(dir)
-      val dbLoc = Tables.scratch(db + "_db")
+      val (db, dbLoc) = Tables.storeAt("graft_bm25_b7_", dir)
       val d = docs(s, dir)
       graft.engine.PhaseTimer.time("build") {
         Retrieval.buildPostingStore(s, d.filter(col("doc_id") >= 50),
@@ -280,8 +278,7 @@ object Lexical {
     // any residue of the deleted docs (a posting, a norm row, a stale
     // df) flips scores and the hash.
     "b8_store_delete" -> ((s, dir) => {
-      val db = "graft_bm25_b8_" + Tables.dirTag(dir)
-      val dbLoc = Tables.scratch(db + "_db")
+      val (db, dbLoc) = Tables.storeAt("graft_bm25_b8_", dir)
       val d = docs(s, dir)
       graft.engine.PhaseTimer.time("build") {
         Retrieval.buildPostingStore(s, d, "doc_id", "text", db, dbLoc,

@@ -319,19 +319,14 @@ object Relational {
     // the broadcast threshold at toy scale. PlanAudit shows this query's
     // plan with no Exchange lines.
     "j8_bucketed_join" -> ((s, dir) => {
-      val db = "graft_bucketed"
-      val dbLoc = Tables.scratch("bucketed_db")
-      s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$dbLoc'")
-      Seq("li_bkt", "ord_bkt").foreach(tb => graft.ops.Bucketing.reset(
-        s, s"$db.$tb", new java.io.File(dbLoc, tb)))
-      graft.ops.Bucketing.writeBucketed(
+      val store = Tables.store(s, "graft_bucketed_", dir)
+      store.write(
         t(s, dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount"),
-        s"$db.li_bkt", nBuckets = 8, keys = Seq("l_orderkey"))
-      graft.ops.Bucketing.writeBucketed(
-        t(s, dir, "orders").select("o_orderkey", "o_totalprice"),
-        s"$db.ord_bkt", nBuckets = 8, keys = Seq("o_orderkey"))
-      val bl = s.table(s"$db.li_bkt")
-      val bo = s.table(s"$db.ord_bkt")
+        "li_bkt", nBuckets = 8, keys = Seq("l_orderkey"))
+      store.write(t(s, dir, "orders").select("o_orderkey", "o_totalprice"),
+        "ord_bkt", nBuckets = 8, keys = Seq("o_orderkey"))
+      val bl = store.read("li_bkt")
+      val bo = store.read("ord_bkt")
       bl.hint("merge").join(bo, bl("l_orderkey") === bo("o_orderkey"))
         .groupBy("l_orderkey")
         .agg(count(lit(1)).as("n_items"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.engine.Session
+import graft.ops.Bucketing
 
 /** Shared helpers for the declared query surface (SparkEntry.queries). */
 object Tables {
@@ -37,6 +38,28 @@ object Tables {
       .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
     dir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_") + "_" + digest
   }
+
+  /** Catalog name and directory of the store `prefix` for sf dir `dir`:
+    * the name tagged with [[dirTag]], the directory under [[scratch]]. */
+  def storeAt(prefix: String, dir: String): (String, String) = {
+    val db = prefix + dirTag(dir)
+    (db, scratch(db + "_db"))
+  }
+
+  /** Open the store `prefix` for sf dir `dir` ([[Bucketing.Store.open]]:
+    * database created, ledgers cleared). */
+  def store(spark: SparkSession, prefix: String, dir: String): Bucketing.Store = {
+    val (db, loc) = storeAt(prefix, dir)
+    Bucketing.Store.open(spark, db, loc)
+  }
+
+  /** Schema of `documents.parquet`, for the readers that must not probe it. */
+  val DocumentsSchema =
+    "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
+
+  /** `documents` as a stream ([[streamT]] at [[DocumentsSchema]]). */
+  def docStream(spark: SparkSession, dir: String): DataFrame =
+    streamT(spark, dir, "documents", DocumentsSchema)
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     Session.prepare(spark)

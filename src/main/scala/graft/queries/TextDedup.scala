@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.Hashing
-import graft.ops.{Dedup, TextOps}
+import graft.ops.{Bucketing, Dedup, TextOps}
 import Tables.t
 
 import graft.engine.Caches.Registered
@@ -998,9 +998,8 @@ object TextDedup {
     // store's bucketing (PlanAudit/PlanAuditSpec prove the plan shape).
     // Gate split: docs >= 50 are the standing corpus, docs < 50 the batch.
     "d20_incremental_dedup" -> ((s, dir) => {
-      val store = buildSigStore(s, dir, "graft_sigstore_d20_" + Tables.dirTag(dir))
-      val deltaB = Dedup.lshBuckets(Dedup.minhashSignatures(Dedup.shingleHashes(
-          docs(s, dir).filter(col("doc_id") < 50))))
+      val store = standingSigs(buildSigStore(s, dir, "graft_sigstore_d20_"))
+      val deltaB = sigBuckets(docs(s, dir).filter(col("doc_id") < 50))
         .select(col("band"), col("band_key"), col("doc_id").as("doc_new"))
       store.hint("merge").join(deltaB, Seq("band", "band_key"))
         .groupBy("doc_new", "doc_old")
@@ -1016,17 +1015,15 @@ object TextDedup {
     // land in the sink and one batch rollup produces exactly d20's output
     // (same oracle) — continuous-ingest dedup against the standing corpus.
     "e9_stream_incremental" -> ((s, dir) => {
-      val store = buildSigStore(s, dir, "graft_sigstore_e9_" + Tables.dirTag(dir))
+      val store = standingSigs(buildSigStore(s, dir, "graft_sigstore_e9_"))
       graft.streaming.StreamingWindows.withStatePartitions(s, 4) {
-        val delta = Tables.streamT(s, dir, "documents",
-          "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
+        val delta = Tables.docStream(s, dir)
           .filter(col("doc_id") < 50)
           .select(col("doc_id").as("doc_new"),
             posexplode(Dedup.lshBandsPerRow(col("text")))
               .as(Seq("band", "band_key")))
         val matches = delta.join(store, Seq("band", "band_key"))
-        graft.streaming.StreamingWindows.runToMemory(
-          matches, "e9_mem_" + java.util.UUID.randomUUID().toString.replace("-", ""),
+        graft.streaming.StreamingWindows.runToMemory(matches, "e9_mem",
           org.apache.spark.sql.streaming.OutputMode.Append())
           .groupBy("doc_new", "doc_old")
           .agg(count(lit(1)).as("n_bands"))
@@ -1045,17 +1042,11 @@ object TextDedup {
     // identical band populations prove no row was lost, duplicated, or
     // mis-bucketed by the append path.
     "d21_store_append" -> ((s, dir) => {
-      val db = "graft_sigstore_d21_" + Tables.dirTag(dir)
-      buildSigStore(s, dir, db)
+      val store = buildSigStore(s, dir, "graft_sigstore_d21_")
       graft.ops.Bucketing.appendBucketed(
-        Dedup.lshBuckets(Dedup.minhashSignatures(Dedup.shingleHashes(
-          docs(s, dir).filter(col("doc_id") < 50)))),
-        s"$db.sig_bkt", nBuckets = 8, keys = Seq("band", "band_key"))
-      s.table(s"$db.sig_bkt")
-        .groupBy("band")
-        .agg(count(lit(1)).as("n_rows"),
-          countDistinct("doc_id").as("n_docs"),
-          sum("band_key").as("sum_keys"))
+        sigBuckets(docs(s, dir).filter(col("doc_id") < 50)),
+        store.name("sig_bkt"), nBuckets = 8, keys = SigKeys)
+      sigRollup(store)
     }),
 
     // The d21 maintenance leg as a STREAM — continuous store upkeep: the
@@ -1067,29 +1058,16 @@ object TextDedup {
     // oracle) — no row lost, duplicated, or mis-bucketed by the streaming
     // path either.
     "e11_stream_append" -> ((s, dir) => {
-      val db = "graft_sigstore_e11_" + Tables.dirTag(dir)
-      buildSigStore(s, dir, db)
-      val delta = Tables.streamT(s, dir, "documents",
-        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-        .filter(col("doc_id") < 50)
-      graft.streaming.StreamingWindows.runForeachBatch(delta, "e11") {
+      val store = buildSigStore(s, dir, "graft_sigstore_e11_")
+      graft.streaming.StreamingWindows.runPhase(
+          Tables.docStream(s, dir).filter(col("doc_id") < 50), "e11") {
         (batch, _) =>
-          graft.ops.Bucketing.appendBucketed(
-            Dedup.lshBuckets(Dedup.minhashSignatures(Dedup.shingleHashes(batch))),
-            s"$db.sig_bkt", nBuckets = 8, keys = Seq("band", "band_key"))
+          graft.ops.Bucketing.appendBucketed(sigBuckets(batch),
+            store.name("sig_bkt"), nBuckets = 8, keys = SigKeys)
       }
-      // foreachBatch appends run in Spark's CLONED micro-batch session;
-      // the writer invalidates ITS file-listing cache, not this reader's —
-      // without the refresh this session silently reads the pre-append
-      // listing (observed: rollup missing every appended row). At 100 TB
-      // a metastore/table format (Hive/Iceberg/Delta) carries this
-      // invalidation; for a raw parquet bucketed table it is explicit.
-      s.catalog.refreshTable(s"$db.sig_bkt")
-      s.table(s"$db.sig_bkt")
-        .groupBy("band")
-        .agg(count(lit(1)).as("n_rows"),
-          countDistinct("doc_id").as("n_docs"),
-          sum("band_key").as("sum_keys"))
+      // The appends ran in Spark's CLONED micro-batch session, so the
+      // rollup reads the table after a refresh (Bucketing.Store.read).
+      sigRollup(store)
     }),
 
     // e11 hardened to EXACTLY-ONCE under micro-batch replay. Structured
@@ -1102,41 +1080,19 @@ object TextDedup {
     // double-counts every row of batch 0 and hash-misses the single-append
     // oracle (same oracle as d21/e11 — a full-corpus rebuild).
     "e12_exactly_once_append" -> ((s, dir) => {
-      val db = "graft_sigstore_e12_" + Tables.dirTag(dir)
-      buildSigStore(s, dir, db)
-      val ledger = new java.io.File(Tables.scratch(db + "_ledger"))
-      // Bench/Verify invoke each query more than once and buildSigStore
-      // resets the store each time — the ledger must reset with it or the
-      // second invocation's batch 0 would be wrongly skipped.
-      Option(ledger.listFiles()).foreach(_.foreach(_.delete()))
-      val delta = Tables.streamT(s, dir, "documents",
-        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-        .filter(col("doc_id") < 50)
-      val seenBatches = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val store = buildSigStore(s, dir, "graft_sigstore_e12_")
       def append(batch: DataFrame, id: Long): Boolean =
-        graft.ops.Bucketing.appendBucketedExactlyOnce(
-          Dedup.lshBuckets(Dedup.minhashSignatures(Dedup.shingleHashes(batch))),
-          s"$db.sig_bkt", nBuckets = 8, keys = Seq("band", "band_key"),
-          ledgerDir = ledger, batchId = id)
-      graft.streaming.StreamingWindows.runForeachBatch(delta, "e12") {
-        (batch, id) => seenBatches += id; append(batch, id); ()
+        store.append("sig_bkt", nBuckets = 8, keys = SigKeys, id)(
+          sigBuckets(batch))
+      val last = graft.streaming.StreamingWindows.runPhase(
+          Tables.docStream(s, dir).filter(col("doc_id") < 50), "e12") {
+        (batch, id) => append(batch, id); ()
       }
       // Redeliver the last micro-batch (the restart-replay shape): the
       // returned false is the ledger skipping the duplicate append.
-      // (nonEmpty guard: an AvailableNow stream whose glob matched nothing
-      // produces ZERO micro-batches — surface that as a named data-layout
-      // error, not an opaque NoSuchElementException.)
-      require(seenBatches.nonEmpty, "stream produced no micro-batches " +
-        "(stream source matched no files?)")
-      val replayed = append(
-        docs(s, dir).filter(col("doc_id") < 50), seenBatches.last)
-      require(!replayed, "ledger failed to suppress a replayed micro-batch")
-      s.catalog.refreshTable(s"$db.sig_bkt")
-      s.table(s"$db.sig_bkt")
-        .groupBy("band")
-        .agg(count(lit(1)).as("n_rows"),
-          countDistinct("doc_id").as("n_docs"),
-          sum("band_key").as("sum_keys"))
+      require(!append(docs(s, dir).filter(col("doc_id") < 50), last),
+        "ledger failed to suppress a replayed micro-batch")
+      sigRollup(store)
     }),
 
     // THE PRODUCTION LOOP, composed end-to-end as ONE stream: each
@@ -1152,20 +1108,12 @@ object TextDedup {
     // matched, lost, or double-appended flips the rollup. Integer
     // columns only, so the gate needs no FP pinning.
     "e14_stream_curation" -> ((s, dir) => {
-      val db = "graft_sigstore_e14_" + Tables.dirTag(dir)
-      val store = buildSigStore(s, dir, db)
-      val cur = "graft_curated_e14_" + Tables.dirTag(dir)
-      val curLoc = Tables.scratch(cur + "_db")
-      s.sql(s"CREATE DATABASE IF NOT EXISTS $cur LOCATION '$curLoc'")
-      graft.ops.Bucketing.reset(s, s"$cur.docs_bkt",
-        new java.io.File(curLoc, "docs_bkt"))
+      val store = standingSigs(buildSigStore(s, dir, "graft_sigstore_e14_"))
+      val cur = Tables.store(s, "graft_curated_e14_", dir)
       // Bootstrap the curated table's bucket layout with an empty slice so
       // every micro-batch append validates against one standing spec.
-      graft.ops.Bucketing.writeBucketed(
-        docs(s, dir).select("doc_id", "lang", "n_chars").limit(0),
-        s"$cur.docs_bkt", nBuckets = 8, keys = Seq("doc_id"))
-      val ledger = new java.io.File(Tables.scratch(cur + "_ledger"))
-      Option(ledger.listFiles()).foreach(_.foreach(_.delete()))
+      cur.write(docs(s, dir).select("doc_id", "lang", "n_chars").limit(0),
+        "docs_bkt", nBuckets = 8, keys = Seq("doc_id"))
       // The per-batch policy: Gopher gate, then the stateless store probe
       // (the e9 shape — band keys are a pure function of the text).
       def curate(batch: DataFrame): DataFrame = {
@@ -1184,24 +1132,16 @@ object TextDedup {
         passed.join(dup, Seq("doc_id"), "left_anti")
           .select(col("doc_id"), col("lang"), col("n_chars"))
       }
-      val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
       def append(b: DataFrame, id: Long): Boolean =
-        graft.ops.Bucketing.appendBucketedExactlyOnce(curate(b),
-          s"$cur.docs_bkt", nBuckets = 8, keys = Seq("doc_id"),
-          ledgerDir = ledger, batchId = id)
-      val delta = Tables.streamT(s, dir, "documents",
-        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-        .filter(col("doc_id") < 50)
-      graft.streaming.StreamingWindows.runForeachBatch(delta, "e14") {
-        (batch, id) => seen += id; append(batch, id); ()
+        cur.append("docs_bkt", nBuckets = 8, keys = Seq("doc_id"), id)(
+          curate(b))
+      val last = graft.streaming.StreamingWindows.runPhase(
+          Tables.docStream(s, dir).filter(col("doc_id") < 50), "e14") {
+        (batch, id) => append(batch, id); ()
       }
-      require(seen.nonEmpty, "stream produced no micro-batches " +
-        "(stream source matched no files?)")
-      val replayed = append(
-        docs(s, dir).filter(col("doc_id") < 50), seen.last)
-      require(!replayed, "ledger failed to suppress a replayed micro-batch")
-      s.catalog.refreshTable(s"$cur.docs_bkt")
-      s.table(s"$cur.docs_bkt")
+      require(!append(docs(s, dir).filter(col("doc_id") < 50), last),
+        "ledger failed to suppress a replayed micro-batch")
+      cur.read("docs_bkt")
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum("doc_id").as("sum_ids"),
           sum("n_chars").as("sum_chars"))
@@ -1223,39 +1163,26 @@ object TextDedup {
     "e19_stream_decontam" -> ((s, dir) => {
       val evalFp = graft.engine.Caches.persisted(Dedup.evalFingerprints(
         docs(s, dir).filter(col("doc_id") < LdsEvalSplit), n = 10))
-      val cur = "graft_decontam_e19_" + Tables.dirTag(dir)
-      val curLoc = Tables.scratch(cur + "_db")
-      s.sql(s"CREATE DATABASE IF NOT EXISTS $cur LOCATION '$curLoc'")
-      graft.ops.Bucketing.reset(s, s"$cur.clean_bkt",
-        new java.io.File(curLoc, "clean_bkt"))
+      val cur = Tables.store(s, "graft_decontam_e19_", dir)
       def clean(batch: DataFrame): DataFrame =
         Dedup.cutEvalSpansAgainst(batch, evalFp, n = 10)
           .select(col("doc_id"), col("n_tokens"), col("n_kept"),
             col("n_cuts"))
       // Bootstrap the bucket layout with an empty slice so every
       // micro-batch append validates against one standing spec.
-      graft.ops.Bucketing.writeBucketed(clean(docs(s, dir).limit(0)),
-        s"$cur.clean_bkt", nBuckets = 8, keys = Seq("doc_id"))
-      val ledger = new java.io.File(Tables.scratch(cur + "_ledger"))
-      Option(ledger.listFiles()).foreach(_.foreach(_.delete()))
-      val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+      cur.write(clean(docs(s, dir).limit(0)), "clean_bkt", nBuckets = 8,
+        keys = Seq("doc_id"))
       def append(b: DataFrame, id: Long): Boolean =
-        graft.ops.Bucketing.appendBucketedExactlyOnce(clean(b),
-          s"$cur.clean_bkt", nBuckets = 8, keys = Seq("doc_id"),
-          ledgerDir = ledger, batchId = id)
-      val delta = Tables.streamT(s, dir, "documents",
-        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-        .filter(col("doc_id") >= LdsEvalSplit)
-      graft.streaming.StreamingWindows.runForeachBatch(delta, "e19") {
-        (batch, id) => seen += id; append(batch, id); ()
+        cur.append("clean_bkt", nBuckets = 8, keys = Seq("doc_id"), id)(
+          clean(b))
+      val last = graft.streaming.StreamingWindows.runPhase(
+          Tables.docStream(s, dir).filter(col("doc_id") >= LdsEvalSplit),
+          "e19") {
+        (batch, id) => append(batch, id); ()
       }
-      require(seen.nonEmpty, "stream produced no micro-batches " +
-        "(stream source matched no files?)")
-      val replayed = append(
-        docs(s, dir).filter(col("doc_id") >= LdsEvalSplit), seen.last)
-      require(!replayed, "ledger failed to suppress a replayed micro-batch")
-      s.catalog.refreshTable(s"$cur.clean_bkt")
-      s.table(s"$cur.clean_bkt")
+      require(!append(docs(s, dir).filter(col("doc_id") >= LdsEvalSplit),
+        last), "ledger failed to suppress a replayed micro-batch")
+      cur.read("clean_bkt")
         .select("doc_id", "n_tokens", "n_kept", "n_cuts")
     }),
 
@@ -1272,58 +1199,38 @@ object TextDedup {
     // whole corpus — the stream and the batch engine must agree on every
     // window to the token.
     "e20_stream_pack" -> ((s, dir) => {
-      val cur = "graft_pack_e20_" + Tables.dirTag(dir)
-      val curLoc = Tables.scratch(cur + "_db")
-      s.sql(s"CREATE DATABASE IF NOT EXISTS $cur LOCATION '$curLoc'")
-      graft.ops.Bucketing.reset(s, s"$cur.seg_bkt",
-        new java.io.File(curLoc, "seg_bkt"))
-      graft.ops.Bucketing.writeBucketed(
+      val cur = Tables.store(s, "graft_pack_e20_", dir)
+      cur.write(
         graft.ops.Split.packManifest(docs(s, dir).limit(0), "text",
           "doc_id", 512),
-        s"$cur.seg_bkt", nBuckets = 8, keys = Seq("bin_id"))
-      val ledger = new java.io.File(Tables.scratch(cur + "_ledger"))
-      Option(ledger.listFiles()).foreach(_.foreach(_.delete()))
+        "seg_bkt", nBuckets = 8, keys = Seq("bin_id"))
       // Cross-batch state machine: graft.streaming.PackingStream (the
       // ADVICE-r17 hardening, redelivery-tested in ExactlyOnceSpec) —
-      // ledger keyed on phaseBase + Spark's OWN delivered batchId, carry
-      // advanced only on a real append.
+      // ledger keyed on the phase id, carry advanced only on a real
+      // append.
       var st = graft.streaming.PackingStream.Fresh
-      def phase(name: String, phaseBase: Long, lo: Long, hi: Long): Unit = {
-        val part = Tables.streamT(s, dir, "documents",
-            "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-          .filter(col("doc_id") >= lo && col("doc_id") < hi)
-        graft.streaming.StreamingWindows.runForeachBatch(part, name) {
-          (batch, id) =>
-            val m = graft.engine.Caches.persisted(
-              graft.ops.Split.packManifest(batch, "text", "doc_id", 512,
-                st.carry))
-            st = graft.streaming.PackingStream.step(m, s"$cur.seg_bkt",
-              nBuckets = 8, ledgerDir = ledger, ledgerId = phaseBase + id,
-              st = st)
-            ()
-        }
+      def pack(batch: DataFrame, id: Long): Unit = {
+        val m = graft.engine.Caches.persisted(
+          graft.ops.Split.packManifest(batch, "text", "doc_id", 512,
+            st.carry))
+        st = graft.streaming.PackingStream.step(m, cur.name("seg_bkt"),
+          nBuckets = 8, ledgerDir = cur.ledger(), ledgerId = id, st = st)
       }
-      // Each phase runs its own query (batch ids restart at 0), so phases
-      // get disjoint ledger id ranges — id collisions across phases would
-      // wrongly suppress the second phase's batches.
-      phase("e20a", 0L, 0L, 250L)
-      phase("e20b", 1000000L, 250L, Long.MaxValue)
-      require(st.nAppended >= 2,
-        "expected at least one micro-batch per phase " +
-          "(stream source matched no files?)")
+      graft.streaming.StreamingWindows.runPhase(
+        docWindow(s, dir, 0L, 250L), "e20a", 0)(pack)
+      graft.streaming.StreamingWindows.runPhase(
+        docWindow(s, dir, 250L, Long.MaxValue), "e20b", 1)(pack)
       // Redeliver the final micro-batch under its committed ledger id:
       // the append must be suppressed (a deliberately WRONG offset rides
       // the replay, so a ledger failure corrupts a window and flips the
       // hash instead of passing silently).
-      val replayed = graft.ops.Bucketing.appendBucketedExactlyOnce(
+      val replayed = cur.append("seg_bkt", nBuckets = 8,
+          keys = Seq("bin_id"), st.lastLedgerId)(
         graft.ops.Split.packManifest(
           docs(s, dir).filter(col("doc_id") >= 250L), "text", "doc_id",
-          512),
-        s"$cur.seg_bkt", nBuckets = 8, keys = Seq("bin_id"),
-        ledgerDir = ledger, batchId = st.lastLedgerId)
+          512))
       require(!replayed, "ledger failed to suppress a replayed micro-batch")
-      s.catalog.refreshTable(s"$cur.seg_bkt")
-      s.table(s"$cur.seg_bkt")
+      cur.read("seg_bkt")
         .groupBy("bin_id")
         .agg(count(lit(1)).as("n_docs"), sum("len").as("n_tokens"),
           min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
@@ -1343,27 +1250,21 @@ object TextDedup {
     // (a dropped match loses a containment row) nor invent one that
     // survives verification differently.
     "e21_stream_containment" -> ((s, dir) => {
-      val db = "graft_contstore_e21_" + Tables.dirTag(dir)
-      val dbLoc = Tables.scratch(db + "_db")
-      s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$dbLoc'")
-      graft.ops.Bucketing.reset(s, s"$db.win_bkt",
-        new java.io.File(dbLoc, "win_bkt"))
-      graft.ops.Bucketing.writeBucketed(
+      val st = Tables.store(s, "graft_contstore_e21_", dir)
+      st.write(
         Dedup.cappedWindowOcc(Dedup.windowOcc(docs(s, dir), 10), 64)
           .select(col("h"), col("doc_id").as("doc_old")),
-        s"$db.win_bkt", nBuckets = 8, keys = Seq("h"))
-      val store = s.table(s"$db.win_bkt")
+        "win_bkt", nBuckets = 8, keys = Seq("h"))
+      val store = st.read("win_bkt")
       graft.streaming.StreamingWindows.withStatePartitions(s, 4) {
-        val delta = Tables.streamT(s, dir, "documents",
-          "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
+        val delta = Tables.docStream(s, dir)
           .select(col("doc_id").as("doc_new"),
             explode(Dedup.windowHashesPerRow(col("text"), 10)).as("h"))
         val matches = delta.join(store, Seq("h"))
           .filter(col("doc_new") =!= col("doc_old"))
           .select("doc_new", "doc_old")
         val cand = graft.streaming.StreamingWindows.runToMemory(
-          matches,
-          "e21_mem_" + java.util.UUID.randomUUID().toString.replace("-", ""),
+          matches, "e21_mem",
           org.apache.spark.sql.streaming.OutputMode.Append())
           .select(least(col("doc_new"), col("doc_old")).as("doc_a"),
             greatest(col("doc_new"), col("doc_old")).as("doc_b"))
@@ -1389,45 +1290,30 @@ object TextDedup {
     "e22_containment_ingest" -> ((s, dir) => {
       val standing = graft.engine.Caches.persisted(
         docs(s, dir).filter(col("doc_id") >= LdsEvalSplit))
-      val db = "graft_ingest_e22_" + Tables.dirTag(dir)
-      val dbLoc = Tables.scratch(db + "_db")
-      s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$dbLoc'")
+      val store = Tables.store(s, "graft_ingest_e22_", dir)
       // Standing capped window-hash store (the e21 probe side, standing
       // slice only — the cap is a property of the standing corpus).
-      graft.ops.Bucketing.reset(s, s"$db.win_bkt",
-        new java.io.File(dbLoc, "win_bkt"))
-      graft.ops.Bucketing.writeBucketed(
+      store.write(
         Dedup.cappedWindowOcc(Dedup.windowOcc(standing, 10), 64)
           .select(col("h"), col("doc_id").as("doc_b")),
-        s"$db.win_bkt", nBuckets = 8, keys = Seq("h"))
-      val winStore = s.table(s"$db.win_bkt")
+        "win_bkt", nBuckets = 8, keys = Seq("h"))
+      val winStore = store.read("win_bkt")
       // Decision store: one row per arrival, landed or quarantined.
-      graft.ops.Bucketing.reset(s, s"$db.ingest_bkt",
-        new java.io.File(dbLoc, "ingest_bkt"))
       def decide(batch: DataFrame): DataFrame =
         arrivalDecisions(batch, standing.unionByName(batch), winStore)
-      graft.ops.Bucketing.writeBucketed(decide(docs(s, dir).limit(0)),
-        s"$db.ingest_bkt", nBuckets = 8, keys = Seq("doc_id"))
-      val ledger = new java.io.File(Tables.scratch(db + "_ledger"))
-      Option(ledger.listFiles()).foreach(_.foreach(_.delete()))
-      val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+      store.write(decide(docs(s, dir).limit(0)), "ingest_bkt", nBuckets = 8,
+        keys = Seq("doc_id"))
       def append(b: DataFrame, id: Long): Boolean =
-        graft.ops.Bucketing.appendBucketedExactlyOnce(decide(b),
-          s"$db.ingest_bkt", nBuckets = 8, keys = Seq("doc_id"),
-          ledgerDir = ledger, batchId = id)
-      val delta = Tables.streamT(s, dir, "documents",
-        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-        .filter(col("doc_id") < LdsEvalSplit)
-      graft.streaming.StreamingWindows.runForeachBatch(delta, "e22") {
-        (batch, id) => seen += id; append(batch, id); ()
+        store.append("ingest_bkt", nBuckets = 8, keys = Seq("doc_id"), id)(
+          decide(b))
+      val last = graft.streaming.StreamingWindows.runPhase(
+          Tables.docStream(s, dir).filter(col("doc_id") < LdsEvalSplit),
+          "e22") {
+        (batch, id) => append(batch, id); ()
       }
-      require(seen.nonEmpty, "stream produced no micro-batches " +
-        "(stream source matched no files?)")
-      val replayed = append(
-        docs(s, dir).filter(col("doc_id") < LdsEvalSplit), seen.last)
-      require(!replayed, "ledger failed to suppress a replayed micro-batch")
-      s.catalog.refreshTable(s"$db.ingest_bkt")
-      s.table(s"$db.ingest_bkt")
+      require(!append(docs(s, dir).filter(col("doc_id") < LdsEvalSplit),
+        last), "ledger failed to suppress a replayed micro-batch")
+      store.read("ingest_bkt")
         .select("doc_id", "landed", "keeper_id", "n_containers",
           "max_cont_e6")
     }),
@@ -1476,22 +1362,16 @@ object TextDedup {
           .drop("_ex")
       val arrAll = graft.engine.Caches.persisted(
         mutate(base.filter(col("doc_id") < LdsEvalSplit)))
-      val db = "graft_ingest_e23_" + Tables.dirTag(dir)
-      val dbLoc = Tables.scratch(db + "_db")
-      s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$dbLoc'")
+      val store = Tables.store(s, "graft_ingest_e23_", dir)
       // Standing capped window-hash store (e22's build; the cap is a
       // property of each appended slice — standing here, each window's
       // landed arrivals below).
-      graft.ops.Bucketing.reset(s, s"$db.win_bkt",
-        new java.io.File(dbLoc, "win_bkt"))
       graft.engine.PhaseTimer.time("build") {
-        graft.ops.Bucketing.writeBucketed(
+        store.write(
           Dedup.cappedWindowOcc(Dedup.windowOcc(standing, 10), 64)
             .select(col("h"), col("doc_id").as("doc_b")),
-          s"$db.win_bkt", nBuckets = 8, keys = Seq("h"))
+          "win_bkt", nBuckets = 8, keys = Seq("h"))
       }
-      graft.ops.Bucketing.reset(s, s"$db.ingest_bkt",
-        new java.io.File(dbLoc, "ingest_bkt"))
       // Decide against the CURRENT store — resolved fresh per batch, so
       // each window's probe sees every extension committed before it.
       def decide(batch0: DataFrame): DataFrame = {
@@ -1500,33 +1380,28 @@ object TextDedup {
         // the micro-batch source and re-ran the mutate join (guide §1.2).
         val batch = graft.engine.Caches.persisted(mutate(batch0))
         arrivalDecisions(batch, standing.unionByName(arrAll),
-          s.table(s"$db.win_bkt"))
+          store.read("win_bkt"))
       }
-      graft.ops.Bucketing.writeBucketed(decide(base.limit(0)),
-        s"$db.ingest_bkt", nBuckets = 8, keys = Seq("doc_id"))
-      val ledgerI = new java.io.File(Tables.scratch(db + "_ledgerI"))
-      val ledgerS = new java.io.File(Tables.scratch(db + "_ledgerS"))
-      Seq(ledgerI, ledgerS).foreach(l =>
-        Option(l.listFiles()).foreach(_.foreach(_.delete())))
+      store.write(decide(base.limit(0)), "ingest_bkt", nBuckets = 8,
+        keys = Seq("doc_id"))
       def append(b: DataFrame, id: Long): Boolean =
-        graft.ops.Bucketing.appendBucketedExactlyOnce(decide(b),
-          s"$db.ingest_bkt", nBuckets = 8, keys = Seq("doc_id"),
-          ledgerDir = ledgerI, batchId = id)
+        store.append("ingest_bkt", nBuckets = 8, keys = Seq("doc_id"), id)(
+          decide(b))
+      def ingest(b: DataFrame, id: Long): Unit = { append(b, id); () }
       // Store EXTENSION: the window's landed arrivals (read back from the
       // COMMITTED decision store — the loop is driven by what actually
       // landed, not by in-memory state), their capped window hashes
       // appended under the extension ledger.
       def extend(lo: Long, hi: Long, id: Long): Boolean = {
-        s.catalog.refreshTable(s"$db.ingest_bkt")
-        val landed = s.table(s"$db.ingest_bkt")
-          .filter(col("landed") && col("doc_id") >= lo && col("doc_id") < hi)
-          .select("doc_id")
-        val capped = Dedup.cappedWindowOcc(
-            Dedup.windowOcc(arrAll.join(landed, Seq("doc_id")), 10), 64)
-          .select(col("h"), col("doc_id").as("doc_b"))
-        val appended = graft.ops.Bucketing.appendBucketedExactlyOnce(capped,
-          s"$db.win_bkt", nBuckets = 8, keys = Seq("h"),
-          ledgerDir = ledgerS, batchId = id)
+        val appended = store.append("win_bkt", nBuckets = 8, keys = Seq("h"),
+            id, ledger = "extend") {
+          val landed = store.read("ingest_bkt")
+            .filter(col("landed") && col("doc_id") >= lo && col("doc_id") < hi)
+            .select("doc_id")
+          Dedup.cappedWindowOcc(
+              Dedup.windowOcc(arrAll.join(landed, Seq("doc_id")), 10), 64)
+            .select(col("h"), col("doc_id").as("doc_b"))
+        }
         // COMPACT the self-extending store back to one file per bucket
         // under its own name (the b7 in-place rewrite applied to win_bkt —
         // without it every extension leaves one more file per touched
@@ -1535,31 +1410,20 @@ object TextDedup {
         // store. A suppressed replay appended nothing, so it compacts
         // nothing.
         if (appended)
-          graft.ops.Bucketing.rewriteBucketedInPlace(s, db, "win_bkt",
+          graft.ops.Bucketing.rewriteBucketedInPlace(s, store.db, "win_bkt",
             Seq("h"), 8)(identity)
-        s.catalog.refreshTable(s"$db.win_bkt")
         appended
       }
-      var lastId = -1L
-      def phase(name: String, phaseBase: Long, lo: Long, hi: Long): Unit = {
-        val part = Tables.streamT(s, dir, "documents",
-            "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-          .filter(col("doc_id") >= lo && col("doc_id") < hi)
-        graft.streaming.StreamingWindows.runForeachBatch(part, name) {
-          (batch, id) => lastId = phaseBase + id; append(batch, lastId); ()
-        }
-      }
       graft.engine.PhaseTimer.time("stream") {
-        phase("e23a", 0L, 0L, 25L)
-        require(lastId >= 0L, "phase A produced no micro-batches " +
-          "(stream source matched no files?)")
+        graft.streaming.StreamingWindows.runPhase(
+          docWindow(s, dir, 0L, 25L), "e23a", 0)(ingest)
       }
       graft.engine.PhaseTimer.time("extend") {
         require(extend(0L, 25L, 0L), "phase-A store extension did not append")
       }
-      graft.engine.PhaseTimer.time("stream") {
-        phase("e23b", 1000000L, 25L, LdsEvalSplit)
-        require(lastId >= 1000000L, "phase B produced no micro-batches")
+      val last = graft.engine.PhaseTimer.time("stream") {
+        graft.streaming.StreamingWindows.runPhase(
+          docWindow(s, dir, 25L, LdsEvalSplit), "e23b", 1)(ingest)
       }
       graft.engine.PhaseTimer.time("extend") {
         require(extend(25L, LdsEvalSplit, 1L),
@@ -1570,7 +1434,7 @@ object TextDedup {
       // extension replay would double every landed-A store row, and the
       // ingest replay rides a full-arrival-set batch whose decisions
       // would flip rows if appended).
-      require(!append(base.filter(col("doc_id") < LdsEvalSplit), lastId),
+      require(!append(base.filter(col("doc_id") < LdsEvalSplit), last),
         "ledger failed to suppress a replayed ingest window")
       require(!extend(0L, 25L, 0L),
         "ledger failed to suppress a replayed store extension")
@@ -1578,13 +1442,11 @@ object TextDedup {
       // compact back to one file per bucket and read the RESULT from the
       // compacted store (BucketingSpec pins the file counts).
       graft.engine.PhaseTimer.time("compact") {
-        graft.ops.Bucketing.reset(s, s"$db.ingest_cmp",
-          new java.io.File(dbLoc, "ingest_cmp"))
         graft.ops.Bucketing.compactBucketed(s,
-          new java.io.File(dbLoc, "ingest_bkt").toString,
-          s"$db.ingest_cmp", nBuckets = 8, keys = Seq("doc_id"))
+          store.dir("ingest_bkt").toString, store.fresh("ingest_cmp"),
+          nBuckets = 8, keys = Seq("doc_id"))
       }
-      s.table(s"$db.ingest_cmp")
+      store.read("ingest_cmp")
         .select("doc_id", "landed", "keeper_id", "n_containers",
           "max_cont_e6")
     }),
@@ -1634,11 +1496,7 @@ object TextDedup {
           .select("doc_id", "text")
       val evalFp = graft.engine.Caches.persisted(Dedup.evalFingerprints(
         all.filter(col("doc_id") < LdsEvalSplit), 10))
-      val db = "graft_cur_e24_" + Tables.dirTag(dir)
-      val dbLoc = Tables.scratch(db + "_db")
-      s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$dbLoc'")
-      graft.ops.Bucketing.reset(s, s"$db.stage_bkt",
-        new java.io.File(dbLoc, "stage_bkt"))
+      val store = Tables.store(s, "graft_cur_e24_", dir)
       // Per-window stage decisions against window ∪ accumulated store.
       def decide(batch0: DataFrame): DataFrame = {
         // Persisted: b1 feeds THREE consumers inside the window's one
@@ -1647,7 +1505,7 @@ object TextDedup {
         // and re-ran the mutate join + gopher regex gate (guide §1.2).
         val b1 = graft.engine.Caches.persisted(
           mutate(batch0).filter(TextOps.gopherPass(col("text"))))
-        val keepers = s.table(s"$db.stage_bkt")
+        val keepers = store.read("stage_bkt")
           .filter(col("exact_kept")).select("text").distinct()
           .withColumn("_seen", lit(true))
         val minIn = b1.groupBy("text").agg(min("doc_id").as("_min_id"))
@@ -1665,48 +1523,30 @@ object TextDedup {
       }
       // Schema seed WITHOUT reading the store (decide() consults the
       // store's keepers, and the table doesn't exist yet).
-      graft.ops.Bucketing.writeBucketed(
+      store.write(
         mutate(all.limit(0)).withColumn("exact_kept", lit(true))
           .withColumn("decontam_kept", lit(true)),
-        s"$db.stage_bkt", nBuckets = 8, keys = Seq("doc_id"))
-      val ledger = new java.io.File(Tables.scratch(db + "_ledger"))
-      Option(ledger.listFiles()).foreach(_.foreach(_.delete()))
-      var lastId = -1L
-      def append(b: DataFrame, id: Long): Boolean = {
-        // An already-committed batchId is suppressed BEFORE the window's
-        // decisions are materialized — the same check
-        // appendBucketedExactlyOnce front-loads, hoisted so a replayed
-        // window doesn't pay a full (discarded) decide pass just to be
-        // told no (the restart-path cost a production sink also skips).
-        if (graft.ops.Bucketing.isCommitted(ledger, id)) return false
-        // PIN the window's decisions against the PRE-append store before
-        // the write touches that same store (the read side must never
-        // observe files its own append is creating).
-        val decided = decide(b).localCheckpoint()
-        val appended = graft.ops.Bucketing.appendBucketedExactlyOnce(
-          decided, s"$db.stage_bkt", nBuckets = 8, keys = Seq("doc_id"),
-          ledgerDir = ledger, batchId = id)
-        s.catalog.refreshTable(s"$db.stage_bkt")
-        appended
-      }
-      def phase(name: String, phaseBase: Long, lo: Long, hi: Long): Unit = {
-        val part = Tables.streamT(s, dir, "documents",
-            "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-          .filter(col("doc_id") >= lo && col("doc_id") < hi)
-        graft.streaming.StreamingWindows.runForeachBatch(part, name) {
-          (batch, id) => lastId = phaseBase + id; append(batch, lastId); ()
-        }
-      }
+        "stage_bkt", nBuckets = 8, keys = Seq("doc_id"))
+      // The decisions are built inside the exactly-once step, so a
+      // replayed window pays no (discarded) decide pass; they are PINNED
+      // against the PRE-append store before the write touches that same
+      // store (the read side must never observe files its own append is
+      // creating).
+      def append(b: DataFrame, id: Long): Boolean =
+        store.append("stage_bkt", nBuckets = 8, keys = Seq("doc_id"), id)(
+          decide(b).localCheckpoint())
+      def ingest(b: DataFrame, id: Long): Unit = { append(b, id); () }
       graft.engine.PhaseTimer.time("stream") {
-        phase("e24a", 0L, LdsEvalSplit, 150L)
-        require(lastId >= 0L, "window 1 produced no micro-batches " +
-          "(stream source matched no files?)")
-        phase("e24b", 1000000L, 150L, 300L)
-        phase("e24c", 2000000L, 300L, Long.MaxValue)
+        graft.streaming.StreamingWindows.runPhase(
+          docWindow(s, dir, LdsEvalSplit, 150L), "e24a", 0)(ingest)
+        graft.streaming.StreamingWindows.runPhase(
+          docWindow(s, dir, 150L, 300L), "e24b", 1)(ingest)
+        val last = graft.streaming.StreamingWindows.runPhase(
+          docWindow(s, dir, 300L, Long.MaxValue), "e24c", 2)(ingest)
         // Replay probe: the last committed window redelivered under its id
         // (with the decisions recomputed against the post-advance store —
         // deliberately wrong, exactly what a restart does) must not append.
-        require(!append(all.filter(col("doc_id") >= 300L), lastId),
+        require(!append(all.filter(col("doc_id") >= 300L), last),
           "ledger failed to suppress a replayed ingest window")
       }
       // The decision store accreted one file per touched bucket per
@@ -1715,25 +1555,24 @@ object TextDedup {
       // bucket. "Decide at compaction" is then literal: the containment
       // pass runs over the store the compaction just rewrote.
       graft.engine.PhaseTimer.time("compact") {
-        graft.ops.Bucketing.rewriteBucketedInPlace(s, db, "stage_bkt",
+        graft.ops.Bucketing.rewriteBucketedInPlace(s, store.db, "stage_bkt",
           Seq("doc_id"), 8)(identity)
-        s.catalog.refreshTable(s"$db.stage_bkt")
       }
       // Decide-at-compaction tail over the accumulated store: one batch
       // containment pass over the stage-3 survivors, then the pack —
       // c12's stages 4-5.
-      val store = graft.engine.Caches.persisted(s.table(s"$db.stage_bkt")
+      val stages = graft.engine.Caches.persisted(store.read("stage_bkt")
         .select("doc_id", "text", "exact_kept", "decontam_kept"))
       val (s3, tail) = graft.engine.PhaseTimer.time("tail") {
-        val s3x = store.filter(col("exact_kept") && col("decontam_kept"))
+        val s3x = stages.filter(col("exact_kept") && col("decontam_kept"))
           .select("doc_id", "text")
           .localCheckpoint()
         (s3x, containmentPackFunnel(s3x))
       }
       all.filter(col("doc_id") >= LdsEvalSplit)
         .agg(count(lit(1)).as("n_total"))
-        .crossJoin(store.agg(count(lit(1)).as("after_gopher")))
-        .crossJoin(store.filter(col("exact_kept"))
+        .crossJoin(stages.agg(count(lit(1)).as("after_gopher")))
+        .crossJoin(stages.filter(col("exact_kept"))
           .agg(count(lit(1)).as("after_exact")))
         .crossJoin(s3.agg(count(lit(1)).as("after_decontam")))
         .crossJoin(tail)
@@ -1808,30 +1647,23 @@ object TextDedup {
     // stateless stream-static shape; the final union is band-level rows
     // from both probes rolled up once.
     "e10_multibatch_lifecycle" -> ((s, dir) => {
-      val db = "graft_sigstore_e10_" + Tables.dirTag(dir)
-      buildSigStore(s, dir, db, minDocId = 200)
+      val store = buildSigStore(s, dir, "graft_sigstore_e10_", minDocId = 200)
       def probe(lo: Long, hi: Long): DataFrame =
         graft.streaming.StreamingWindows.withStatePartitions(s, 4) {
-          val delta = Tables.streamT(s, dir, "documents",
-            "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-            .filter(col("doc_id") >= lo && col("doc_id") < hi)
+          val delta = docWindow(s, dir, lo, hi)
             .select(col("doc_id").as("doc_new"),
               posexplode(Dedup.lshBandsPerRow(col("text")))
                 .as(Seq("band", "band_key")))
           // Re-read the table INSIDE the probe so the second probe plans
           // against the post-append file listing, not a stale snapshot.
-          val store = s.table(s"$db.sig_bkt")
-            .select(col("band"), col("band_key"), col("doc_id").as("doc_old"))
           graft.streaming.StreamingWindows.runToMemory(
-            delta.join(store, Seq("band", "band_key")),
-            "e10_mem_" + java.util.UUID.randomUUID().toString.replace("-", ""),
-            org.apache.spark.sql.streaming.OutputMode.Append())
+            delta.join(standingSigs(store), Seq("band", "band_key")),
+            "e10_mem", org.apache.spark.sql.streaming.OutputMode.Append())
         }
       val batch1Matches = probe(100, 200)
-      graft.ops.Bucketing.appendBucketed(
-        Dedup.lshBuckets(Dedup.minhashSignatures(Dedup.shingleHashes(
-          docs(s, dir).filter(col("doc_id") >= 100 && col("doc_id") < 200)))),
-        s"$db.sig_bkt", nBuckets = 8, keys = Seq("band", "band_key"))
+      graft.ops.Bucketing.appendBucketed(sigBuckets(
+          docs(s, dir).filter(col("doc_id") >= 100 && col("doc_id") < 200)),
+        store.name("sig_bkt"), nBuckets = 8, keys = SigKeys)
       val batch2Matches = probe(0, 100)
       batch1Matches.union(batch2Matches)
         .groupBy("doc_new", "doc_old")
@@ -1850,18 +1682,14 @@ object TextDedup {
       val store = Tables.scratch("e18_snap_" + Tables.dirTag(dir))
       graft.io.SnapshotStore.reset(store)
       var versions = List.empty[Int]
-      def phase(name: String, part: DataFrame): Unit =
-        graft.streaming.StreamingWindows.runForeachBatch(part, name) {
-          (batch, _) =>
-            versions ::= graft.io.SnapshotStore.commit(
-              batch.select("doc_id", "n_chars"), store)
-            ()
-        }
-      val stream = Tables.streamT(s, dir, "documents",
-        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-      phase("e18a", stream.filter(pmod(col("doc_id"), lit(2)) === 0))
-      phase("e18b", stream.filter(pmod(col("doc_id"), lit(2)) === 1))
-      require(versions.nonEmpty, "stream produced no micro-batches")
+      def commit(batch: DataFrame, id: Long): Unit =
+        versions ::= graft.io.SnapshotStore.commit(
+          batch.select("doc_id", "n_chars"), store)
+      val stream = Tables.docStream(s, dir)
+      graft.streaming.StreamingWindows.runPhase(
+        stream.filter(pmod(col("doc_id"), lit(2)) === 0), "e18a", 0)(commit)
+      graft.streaming.StreamingWindows.runPhase(
+        stream.filter(pmod(col("doc_id"), lit(2)) === 1), "e18b", 1)(commit)
       versions.sorted.map { v =>
         graft.io.SnapshotStore.readVersion(s, store, v)
           .agg(count(lit(1)).as("n_docs"), sum("doc_id").as("sum_ids"),
@@ -1882,27 +1710,23 @@ object TextDedup {
     "e17_stream_topk" -> ((s, dir) => {
       var state: DataFrame = null
       var floor = 0L
-      def phase(name: String, part: DataFrame): Unit =
-        graft.streaming.StreamingWindows.runForeachBatch(part, name) {
-          (batch, _) =>
-            val bc = batch
-              .select(explode(TextOps.tokens(col("text"))).as("token"))
-              .groupBy("token").agg(count(lit(1)).as("bc"))
-            val st =
-              if (state != null) state
-              else bc.select(col("token"), lit(null).cast("long").as("cnt"),
-                lit(null).cast("long").as("err")).limit(0)
-            val (ns, nf) = graft.ops.HeavyHitters.mergeSpaceSaving(
-              st, floor, bc, m = 16)
-            state = ns; floor = nf
-            ()
-        }
-      val stream = Tables.streamT(s, dir, "documents",
-        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
-      phase("e17a", stream.filter(pmod(col("doc_id"), lit(2)) === 0))
-      phase("e17b", stream.filter(pmod(col("doc_id"), lit(2)) === 1))
-      require(state != null, "stream produced no micro-batches " +
-        "(stream source matched no files?)")
+      def fold(batch: DataFrame, id: Long): Unit = {
+        val bc = batch
+          .select(explode(TextOps.tokens(col("text"))).as("token"))
+          .groupBy("token").agg(count(lit(1)).as("bc"))
+        val st =
+          if (state != null) state
+          else bc.select(col("token"), lit(null).cast("long").as("cnt"),
+            lit(null).cast("long").as("err")).limit(0)
+        val (ns, nf) = graft.ops.HeavyHitters.mergeSpaceSaving(
+          st, floor, bc, m = 16)
+        state = ns; floor = nf
+      }
+      val stream = Tables.docStream(s, dir)
+      graft.streaming.StreamingWindows.runPhase(
+        stream.filter(pmod(col("doc_id"), lit(2)) === 0), "e17a", 0)(fold)
+      graft.streaming.StreamingWindows.runPhase(
+        stream.filter(pmod(col("doc_id"), lit(2)) === 1), "e17b", 1)(fold)
       val exact = docs(s, dir)
         .select(explode(TextOps.tokens(col("text"))).as("token"))
         .groupBy("token").agg(count(lit(1)).as("true_cnt"))
@@ -2084,24 +1908,45 @@ object TextDedup {
             col("win_offset")).as("pack_checksum")))
   }
 
-  /** One-time signature-store build for the incremental-dedup queries:
-    * the standing corpus (doc_id >= minDocId) shingled ONCE, its LSH bucket
-    * rows persisted bucketed+sorted on the join key. Returns the store frame
-    * with `doc_id` renamed to `doc_old`.
+  /** The incremental-dedup queries' signature store `prefix`: the
+    * standing corpus (doc_id >= minDocId) shingled ONCE, its LSH bucket
+    * rows written bucketed + sorted on the join key as `sig_bkt`.
     */
-  private def buildSigStore(s: SparkSession, dir: String, db: String,
-      minDocId: Long = 50): DataFrame = {
-    val dbLoc = Tables.scratch(db + "_db")
-    s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$dbLoc'")
-    graft.ops.Bucketing.reset(s, s"$db.sig_bkt",
-      new java.io.File(dbLoc, "sig_bkt"))
-    graft.ops.Bucketing.writeBucketed(
-      Dedup.lshBuckets(Dedup.minhashSignatures(Dedup.shingleHashes(
-        t(s, dir, "documents").filter(col("doc_id") >= minDocId)))),
-      s"$db.sig_bkt", nBuckets = 8, keys = Seq("band", "band_key"))
-    s.table(s"$db.sig_bkt")
-      .select(col("band"), col("band_key"), col("doc_id").as("doc_old"))
+  private def buildSigStore(s: SparkSession, dir: String, prefix: String,
+      minDocId: Long = 50): Bucketing.Store = {
+    val store = Tables.store(s, prefix, dir)
+    store.write(sigBuckets(t(s, dir, "documents")
+      .filter(col("doc_id") >= minDocId)), "sig_bkt", nBuckets = 8,
+      keys = SigKeys)
+    store
   }
+
+  /** A signature store's bucket keys. */
+  private val SigKeys = Seq("band", "band_key")
+
+  /** LSH bucket rows of `docs` — the signature store's row shape. */
+  private def sigBuckets(docs: DataFrame): DataFrame =
+    Dedup.lshBuckets(Dedup.minhashSignatures(Dedup.shingleHashes(docs)))
+
+  /** The store's signature rows with `doc_id` renamed `doc_old`: the
+    * probe side of every incremental-dedup join. */
+  private def standingSigs(store: Bucketing.Store): DataFrame =
+    store.read("sig_bkt")
+      .select(col("band"), col("band_key"), col("doc_id").as("doc_old"))
+
+  /** Per-band rollup of the store's signature rows (d21/e11/e12's gate:
+    * equal to a full-corpus rebuild's). */
+  private def sigRollup(store: Bucketing.Store): DataFrame =
+    store.read("sig_bkt")
+      .groupBy("band")
+      .agg(count(lit(1)).as("n_rows"),
+        countDistinct("doc_id").as("n_docs"),
+        sum("band_key").as("sum_keys"))
+
+  /** `documents` streamed over doc_id in [lo, hi). */
+  private def docWindow(s: SparkSession, dir: String, lo: Long,
+      hi: Long): DataFrame =
+    Tables.docStream(s, dir).filter(col("doc_id") >= lo && col("doc_id") < hi)
 
   // ---- oracle ------------------------------------------------------------
 

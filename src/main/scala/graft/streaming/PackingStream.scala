@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   *
   * Contract, pinned by ExactlyOnceSpec:
   *   - the ledger is keyed on a PHASE-DISAMBIGUATED Spark batch id
-  *     (phaseBase + the id the foreachBatch callback delivered) — a
+  *     ([[StreamingWindows.runPhase]]'s id: phase index × 1,000,000 + the
+  *     id the foreachBatch callback delivered) — a
   *     redelivery re-presents the SAME id and hits the committed marker;
   *     a local counter would mint a fresh id and double-append;
   *   - `carry`/`nAppended`/`lastLedgerId` advance ONLY when

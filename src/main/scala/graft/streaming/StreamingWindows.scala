@@ -67,10 +67,13 @@ object StreamingWindows {
     try body finally spark.conf.set(key, prev)
   }
 
-  /** Drive a streaming frame to completion against a named memory sink and
-    * return the materialized result (test/smoke path).
+  /** Drive a streaming frame to completion against a memory sink named
+    * `prefix` plus a unique suffix (a query run twice, or two sessions,
+    * never collide on the sink's table) and return the materialized result.
     */
-  def runToMemory(df: DataFrame, name: String, mode: OutputMode = OutputMode.Complete()): DataFrame = {
+  def runToMemory(df: DataFrame, prefix: String,
+      mode: OutputMode = OutputMode.Complete()): DataFrame = {
+    val name = prefix + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
     // RocksDB state store + changelog checkpointing for every stream this
     // engine starts. The default HDFS-backed store keeps all state as
     // in-memory hashmaps and snapshots one file per store per partition
@@ -116,6 +119,30 @@ object StreamingWindows {
         .trigger(Trigger.AvailableNow())
         .start()
     }
+
+  /** Phase ids are `index * PhaseStride + Spark's batch id`: each phase
+    * runs its own query, whose batch ids restart at 0, so ids of different
+    * phases must not collide in a shared ledger. */
+  val PhaseStride = 1000000L
+
+  /** Run stream phase `index` (named `name`) through `foreachBatch`: `f`
+    * receives each micro-batch with its phase-disambiguated id
+    * (`index * PhaseStride` + Spark's batch id — a redelivered batch keeps
+    * its id). Fails with the phase's name when its source delivered no
+    * micro-batch (an AvailableNow stream whose source matched no files
+    * delivers none), and returns the last id.
+    */
+  def runPhase(df: DataFrame, name: String, index: Int = 0)
+      (f: (DataFrame, Long) => Unit): Long = {
+    var last = -1L
+    runForeachBatch(df, name) { (batch, id) =>
+      last = index * PhaseStride + id
+      f(batch, last)
+    }
+    require(last >= 0L, s"stream phase $name delivered no micro-batch " +
+      "(stream source matched no files?)")
+    last
+  }
 
   /** Root directory for throwaway checkpoints, given the JVM's temp dir.
     * The offset/commit/state checkpoints of a drive-to-completion are dead

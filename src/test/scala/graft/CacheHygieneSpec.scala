@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Caches
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{Dedup, Retrieval, Similarity}
 
 /** The caller-owned persist contract (engine/Caches.scala): operators
   * register their corpus-scale persisted intermediates; after the caller
@@ -29,10 +29,11 @@ class CacheHygieneSpec extends AnyFunSuite {
     .toDF("vec_id", "embedding", "label")
 
   /** Run op → materialize → releaseAll; assert the operator registered at
-    * least one intermediate and that releaseAll leaves none of the RDD ids
-    * it added still persisted.
+    * least one intermediate (unless it is not meant to: `registers`) and
+    * that releaseAll leaves none of the RDD ids it added still persisted.
     */
-  private def assertHygiene(name: String)(op: => org.apache.spark.sql.DataFrame): Unit = {
+  private def assertHygiene(name: String, registers: Boolean = true)
+      (op: => org.apache.spark.sql.DataFrame): Unit = {
     Caches.releaseAll() // clean slate
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val out = op
@@ -40,7 +41,8 @@ class CacheHygieneSpec extends AnyFunSuite {
     // Catalyst prune columns past the cached subtree and the cache never
     // builds, which would make this spec vacuous.
     out.write.format("noop").mode("overwrite").save()
-    assert(Caches.trackedCount > 0, s"$name registered no intermediates")
+    if (registers)
+      assert(Caches.trackedCount > 0, s"$name registered no intermediates")
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(added.nonEmpty, s"$name persisted nothing")
     Caches.releaseAll()
@@ -86,5 +88,22 @@ class CacheHygieneSpec extends AnyFunSuite {
     assertHygiene("ivfPqResidualRerank")(
       Similarity.ivfPqResidualRerank(vecs, k = 2, iters = 1, m = 2,
         nprobe = 1, nQueries = 2, shortlist = 3))
+  }
+
+  test("simhashClusters at radius 0 releases its simhash frame") {
+    assertHygiene("simhashClusters")(Dedup.simhashClusters(docs, maxHamming = 0))
+  }
+
+  test("phraseSearch releases its occurrence frame") {
+    assertHygiene("phraseSearch")(Retrieval.phraseSearch(docs, "doc_id", "text",
+      Seq((0L, Seq("alpha", "beta", "gamma"))).toDF("query_id", "terms"), k = 3))
+  }
+
+  test("star connected components keeps nothing persisted after release") {
+    // Nothing to register: its per-round state is unpersisted in the loop
+    // or ContextCleaner-owned local checkpoints.
+    assertHygiene("connectedComponentsStar", registers = false)(
+      Dedup.connectedComponentsStar(
+        Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("doc_a", "doc_b")))
   }
 }

@@ -263,8 +263,8 @@ class CurationSpec extends AnyFunSuite {
     assert(streamed.length == 1 && batch.length == 1)
     assert(streamed.head == batch.head,
       s"stream/batch funnel mismatch:\n  ${streamed.head}\n  ${batch.head}")
-    val ledger = new java.io.File(graft.queries.Tables.scratch(
-      "graft_cur_e24_" + graft.queries.Tables.dirTag(dir) + "_ledger"))
+    val ledger = graft.ops.Bucketing.Store.ledgerDir(
+      graft.queries.Tables.storeAt("graft_cur_e24_", dir)._2, "append")
     for (id <- Seq(0L, 1000000L, 2000000L))
       assert(graft.ops.Bucketing.isCommitted(ledger, id),
         s"window $id missing from the ledger — the stream ran fewer windows")
